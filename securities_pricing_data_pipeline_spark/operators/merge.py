@@ -37,8 +37,9 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from securities_pricing_data_pipeline_spark.operators.dedup import dedup_latest
 
@@ -108,8 +109,16 @@ class ParquetPartitionOverwriteFormat:
     def exists(self, spark: SparkSession, path: str) -> bool:
         return _path_exists(spark, path)
 
-    def read(self, spark: SparkSession, path: str) -> DataFrame:
-        return spark.read.parquet(path)
+    def read(
+        self, spark: SparkSession, path: str, schema: T.StructType | None = None
+    ) -> DataFrame:
+        """Read the table; with ``schema`` the footers are not sampled, so
+        no schema-inference job runs. A schema may name a subset of the
+        columns (only those are read)."""
+        reader = spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(path)
 
     def upsert_partitions(
         self,
@@ -119,22 +128,42 @@ class ParquetPartitionOverwriteFormat:
         keys: Sequence[str],
         partition_col: str = "trade_date",
         prefer_source_order: Sequence[Column] | None = None,
-    ) -> None:
-        source = source.cache()
-        if self.exists(spark, path):
-            existing = self.read(spark, path)
-            # only the partitions being rewritten (partition pruning via the
-            # collected partition-value list — one small distinct, not a join)
-            part_vals = [
+        partition_values: Sequence | None = None,
+    ) -> int:
+        """Rewrite the partitions ``source`` touches as dedup(source ∪
+        their existing rows). Returns the rows written to those
+        partitions, i.e. their full post-merge contents, counted by an
+        ``Observation`` on the write itself (no re-read).
+
+        ``partition_values`` lists the ``partition_col`` values of
+        ``source`` when the caller knows them (the daily pipeline rewrites
+        exactly its trading date). It must cover every value in
+        ``source``: existing rows of a value left out are dropped. When
+        None, the values are collected from ``source`` (cached for it).
+        """
+        exists = self.exists(spark, path)
+        cached = exists and partition_values is None
+        if cached:
+            source = source.cache()
+            partition_values = [
                 r[0] for r in source.select(partition_col).distinct().collect()
             ]
-            existing = existing.filter(F.col(partition_col).isin(part_vals))
-            merged = _merged_frame(source, existing, keys, prefer_source_order)
-        else:
-            merged = _merged_frame(source, None, keys, prefer_source_order)
+        existing = None
+        if exists:
+            # the target has the source's columns: reading with its schema
+            # skips inference (a column the files lack reads as NULL); the
+            # isin filter prunes to the touched partitions
+            existing = self.read(spark, path, source.schema).filter(
+                F.col(partition_col).isin(list(partition_values))
+            )
+        merged = _merged_frame(source, existing, keys, prefer_source_order)
+        obs = Observation()
+        merged = merged.observe(obs, F.count(F.lit(1)).alias("n"))
         # dynamic partitionOverwriteMode (session.py) → only these partitions move
         merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        source.unpersist()
+        if cached:
+            source.unpersist()
+        return int(obs.get["n"])
 
     def insert_if_absent(
         self,
@@ -144,15 +173,23 @@ class ParquetPartitionOverwriteFormat:
         keys: Sequence[str],
     ) -> int:
         if self.exists(spark, path):
-            target_keys = self.read(spark, path).select(*keys)
+            key_schema = T.StructType([source.schema[k] for k in keys])
+            target_keys = self.read(spark, path, key_schema)
             new_rows = source.join(target_keys, list(keys), "left_anti")
         else:
             new_rows = source
         # dedup within the batch too (first occurrence wins deterministically)
         new_rows = dedup_latest(new_rows, list(keys), [F.asc(k) for k in keys]).cache()
-        n = new_rows.count()
-        if n:
-            new_rows.write.mode("append").parquet(path)
+        # decide before writing: appending an empty frame still writes an
+        # (empty) part file, so an idempotent re-run must not reach the
+        # write. The probe is one limit-1 job (coalesced, so an empty first
+        # partition cannot make it scale up); the count rides the write.
+        n = 0
+        if not new_rows.coalesce(1).isEmpty():
+            obs = Observation()
+            observed = new_rows.observe(obs, F.count(F.lit(1)).alias("n"))
+            observed.write.mode("append").parquet(path)
+            n = int(obs.get["n"])
         new_rows.unpersist()
         return n
 
@@ -215,7 +252,11 @@ class DeltaMergeFormat:
 
         return bool(DeltaTable.isDeltaTable(spark, path))
 
-    def read(self, spark: SparkSession, path: str) -> DataFrame:
+    def read(
+        self, spark: SparkSession, path: str, schema: T.StructType | None = None
+    ) -> DataFrame:
+        """``schema`` is ignored: the Delta log carries the table schema,
+        so a Delta read runs no inference job either way."""
         return spark.read.format("delta").load(path)
 
     def upsert_partitions(
@@ -226,7 +267,13 @@ class DeltaMergeFormat:
         keys: Sequence[str],
         partition_col: str = "trade_date",
         prefer_source_order: Sequence[Column] | None = None,
+        partition_values: Sequence | None = None,
     ) -> None:
+        """Keyed MERGE. ``partition_values`` is accepted for interface
+        parity and unused (MERGE prunes by key, not by a partition list).
+        Returns None, not a row count: a MERGE rewrites only the files
+        holding matched keys, so it never observes a partition's full
+        contents, and callers that need one re-count the table."""
         from delta.tables import DeltaTable
 
         # one row per key, same keep-rule as the parquet backend
@@ -335,10 +382,12 @@ def upsert_partitions(
     keys: Sequence[str],
     partition_col: str = "trade_date",
     prefer_source_order: Sequence[Column] | None = None,
-) -> None:
-    """A5 upsert on the default (parquet) backend — see the class for docs."""
-    _DEFAULT.upsert_partitions(
-        spark, source, path, keys, partition_col, prefer_source_order
+    partition_values: Sequence | None = None,
+) -> int:
+    """A5 upsert on the default (parquet) backend — see the class for docs.
+    Returns the rows written to the touched partitions."""
+    return _DEFAULT.upsert_partitions(
+        spark, source, path, keys, partition_col, prefer_source_order, partition_values
     )
 
 

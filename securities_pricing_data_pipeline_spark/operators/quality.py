@@ -36,8 +36,9 @@ class EmptyLoadError(AssertionError):
 
 def existence_gate(df: DataFrame, what: str = "load") -> None:
     """P5 as a real assertion: fail the run if the frame is empty.
-    Uses limit(1) — never a full count."""
-    if df.limit(1).count() == 0:
+    ``isEmpty`` is one limit-1 job — never a full count, and no
+    aggregate shuffle stage."""
+    if df.isEmpty():
         raise EmptyLoadError(f"existence gate failed: {what} produced 0 rows")
 
 

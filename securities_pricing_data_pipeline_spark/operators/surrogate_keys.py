@@ -15,15 +15,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from securities_pricing_data_pipeline_spark.operators.merge import _table_exists
 
 
 def next_id(spark: SparkSession, dim_path: str, id_col: str = "security_id") -> int:
-    """A3: COALESCE(MAX(id), 0) + 1 high-water mark."""
+    """A3: COALESCE(MAX(id), 0) + 1 high-water mark. Reads only the
+    (long) id column by declared schema: no schema-inference job."""
     if not _table_exists(spark, dim_path):
         return 1
-    row = spark.read.parquet(dim_path).agg(F.coalesce(F.max(id_col), F.lit(0))).first()
+    ids = spark.read.schema(T.StructType([T.StructField(id_col, T.LongType())])).parquet(dim_path)
+    row = ids.agg(F.coalesce(F.max(id_col), F.lit(0))).first()
     return int(row[0]) + 1
 
 

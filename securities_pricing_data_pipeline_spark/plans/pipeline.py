@@ -14,19 +14,26 @@ Stage map (reference task → here):
                             the date layout: trade_date=YYYY-MM-DD/)
   s01 COPY INTO RAW       → sources.csv_source.read_eod_csv → bronze append
   s02 check loaded        → operators.quality.existence_gate (real assert)
-  s03 premerge metrics    → plans.metrics.premerge_metrics
+  s03 premerge metrics    → plans.metrics.premerge_metrics (one aggregate
+                            action over valid ∪ rejects ∪ silver day keys)
   s04 merge CORE+REJECT   → normalize → split_rejects → dedup_latest →
                             upsert_partitions / insert_if_absent
   s05 merge DIM_SECURITY  → surrogate_keys.assign_ids + insert_if_absent
   s06 merge DIM_DATE      → date derivations + insert_if_absent
   s07 merge FACT          → broadcast star join + upsert_partitions
-  s08 postmerge metrics   → plans.metrics.postmerge_counts
+  s08 postmerge metrics   → plans.metrics.postmerge_counts, fed the row
+                            counts the s04/s07 upserts observed on their
+                            own writes (no re-read of silver or fact)
   t05 Slack summary       → plans.notify (pluggable, fires on success AND
                             failure — the reference's trigger_rule=all_done)
 
 Idempotency contract (A7): bronze is append-only and may hold duplicates
 (FORCE=TRUE parity); silver/gold writes are per-trade-date idempotent —
 re-running a date leaves every layer byte-identical (tested).
+
+Every warehouse read passes its declared schema from ``schemas.py``
+(``Warehouse.read``), so no read runs a schema-inference job and the
+layers really are schema-on-read, never inferred.
 """
 
 from __future__ import annotations
@@ -69,8 +76,21 @@ from securities_pricing_data_pipeline_spark.plans.notify import (
     format_summary,
     logging_notifier,
 )
+from securities_pricing_data_pipeline_spark.schemas import (
+    DIM_SECURITY_SCHEMA,
+    EOD_PRICES_SCHEMA,
+    RAW_EOD_PRICES_SCHEMA,
+)
 from securities_pricing_data_pipeline_spark.sources.csv_source import read_eod_csv
 from securities_pricing_data_pipeline_spark.tables import Warehouse
+
+
+def _day(
+    spark: SparkSession, wh: Warehouse, path: str, schema, trading_date: dt.date
+) -> DataFrame:
+    """One trade_date partition of a date-partitioned table, read with its
+    declared schema (partition-pruned, no inference job)."""
+    return wh.read(spark, path, schema).filter(F.col("trade_date") == F.lit(trading_date))
 
 
 def ingest_bronze(
@@ -80,26 +100,25 @@ def ingest_bronze(
     Bronze is partitioned by trade_date and append-only."""
     raw = read_eod_csv(spark, landing_path).filter(F.col("trade_date") == F.lit(trading_date))
     raw.write.mode("append").partitionBy("trade_date").parquet(wh.bronze)
-    loaded = spark.read.parquet(wh.bronze).filter(F.col("trade_date") == F.lit(trading_date))
+    loaded = _day(spark, wh, wh.bronze, RAW_EOD_PRICES_SCHEMA, trading_date)
     existence_gate(loaded, f"bronze load for {trading_date}")  # s02
     return loaded
 
 
 def build_silver(
     spark: SparkSession, wh: Warehouse, trading_date: dt.date
-) -> tuple[int, int, int, int]:
+) -> tuple[tuple[int, int, int, int], int | None]:
     """s03+s04: normalize → reject split → dedup → upsert CORE, insert-only
-    REJECT. Returns premerge metrics (raw, rejects, est_ins, est_upd)."""
-    bronze = spark.read.parquet(wh.bronze).filter(F.col("trade_date") == F.lit(trading_date))
+    REJECT. Returns the premerge metrics (raw, rejects, est_ins, est_upd)
+    and the row count the CORE upsert wrote to the date's partition."""
+    bronze = _day(spark, wh, wh.bronze, RAW_EOD_PRICES_SCHEMA, trading_date)
     normalized = bronze.withColumn("symbol", normalize_symbol(F.col("symbol")))
     valid, rejects = split_rejects(normalized, F.col("volume") >= 0, NEGATIVE_VOLUME)
 
     silver_keys = None
     if _table_exists(spark, wh.silver):
-        silver_keys = (
-            spark.read.parquet(wh.silver)
-            .filter(F.col("trade_date") == F.lit(trading_date))
-            .select("symbol", "trade_date")
+        silver_keys = _day(spark, wh, wh.silver, EOD_PRICES_SCHEMA, trading_date).select(
+            "symbol", "trade_date"
         )
     pre = premerge_metrics(valid, rejects, silver_keys)
 
@@ -119,7 +138,10 @@ def build_silver(
     # metrics ride the write job itself (Observation accumulators) —
     # no second scan, unlike the reference's per-metric COUNT statements
     core_rows, write_obs = observe_write_metrics(core_rows, "silver_write")
-    upsert_partitions(spark, core_rows, wh.silver, keys=["symbol", "trade_date"])
+    core_written = upsert_partitions(
+        spark, core_rows, wh.silver, keys=["symbol", "trade_date"],
+        partition_values=[trading_date],
+    )
     logging.getLogger(__name__).info("silver write metrics: %s", write_obs.get)
 
     # insert-only reject audit (first reject wins, 4.:24-45)
@@ -128,19 +150,18 @@ def build_silver(
         "reject_reason", "_src_file", "_ingest_ts",
     )
     insert_if_absent(spark, reject_rows, wh.reject, keys=["symbol", "trade_date"])
-    return pre
+    return pre, core_written
 
 
 def build_dim_security(spark: SparkSession, wh: Warehouse, trading_date: dt.date) -> int:
     """s05: append-only security dim with deterministic surrogate ids."""
     day_symbols = (
-        spark.read.parquet(wh.silver)
-        .filter(F.col("trade_date") == F.lit(trading_date))
+        _day(spark, wh, wh.silver, EOD_PRICES_SCHEMA, trading_date)
         .select("symbol")
         .distinct()
     )
     if _table_exists(spark, wh.dim_security):
-        existing = spark.read.parquet(wh.dim_security).select("symbol")
+        existing = wh.read(spark, wh.dim_security, DIM_SECURITY_SCHEMA).select("symbol")
         new_symbols = day_symbols.join(existing, "symbol", "left_anti")
     else:
         new_symbols = day_symbols
@@ -171,10 +192,11 @@ def build_dim_date(spark: SparkSession, wh: Warehouse, trading_date: dt.date) ->
     return insert_if_absent(spark, row, wh.dim_date, keys=["date_sk"])
 
 
-def build_fact(spark: SparkSession, wh: Warehouse, trading_date: dt.date) -> None:
-    """s07: star join CORE←dims (broadcast dims) → per-date fact upsert."""
-    core = spark.read.parquet(wh.silver).filter(F.col("trade_date") == F.lit(trading_date))
-    dim_sec = spark.read.parquet(wh.dim_security)
+def build_fact(spark: SparkSession, wh: Warehouse, trading_date: dt.date) -> int | None:
+    """s07: star join CORE←dims (broadcast dims) → per-date fact upsert.
+    Returns the row count the upsert wrote to the date's partition."""
+    core = _day(spark, wh, wh.silver, EOD_PRICES_SCHEMA, trading_date)
+    dim_sec = wh.read(spark, wh.dim_security, DIM_SECURITY_SCHEMA)
     fact = (
         core.join(F.broadcast(dim_sec), "symbol")
         .select(
@@ -185,7 +207,10 @@ def build_fact(spark: SparkSession, wh: Warehouse, trading_date: dt.date) -> Non
             F.current_timestamp().alias("load_ts"),
         )
     )
-    upsert_partitions(spark, fact, wh.fact_daily_price, keys=["security_id", "date_sk"])
+    return upsert_partitions(
+        spark, fact, wh.fact_daily_price, keys=["security_id", "date_sk"],
+        partition_values=[trading_date],
+    )
 
 
 def run(
@@ -200,14 +225,14 @@ def run(
     m = RunMetrics(trading_date=trading_date)
     try:
         ingest_bronze(spark, wh, landing_path, trading_date)
-        m.raw_cnt, m.reject_cnt, m.est_inserts, m.est_updates = build_silver(
-            spark, wh, trading_date
-        )
+        pre, core_written = build_silver(spark, wh, trading_date)
+        m.raw_cnt, m.reject_cnt, m.est_inserts, m.est_updates = pre
         build_dim_security(spark, wh, trading_date)
         build_dim_date(spark, wh, trading_date)
-        build_fact(spark, wh, trading_date)
+        fact_written = build_fact(spark, wh, trading_date)
         m.core_cnt, m.fact_cnt = postmerge_counts(
-            spark, wh.silver, wh.fact_daily_price, trading_date
+            spark, wh.silver, wh.fact_daily_price, trading_date,
+            written=(core_written, fact_written),
         )
     except Exception as exc:
         m.notes.append(f"FAILED: {type(exc).__name__}: {exc}")

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 import sys
 
 from pyspark.sql import functions as F
@@ -56,6 +57,24 @@ def test_upsert_partitions(spark, tmp_path):
     assert got == {("A", d1, 10.0), ("B", d1, 2.0), ("C", d1, 5.0), ("A", d2, 3.0)}
 
 
+def test_upsert_partitions_counts_and_known_partitions(spark, tmp_path):
+    """The returned count is the touched partitions' post-merge rows (read
+    off the write), and passing the partition values the caller already
+    knows gives the same table as collecting them."""
+    d1, d2 = dt.date(2026, 1, 1), dt.date(2026, 1, 2)
+    schema = "symbol string, trade_date date, v double"
+    base = spark.createDataFrame([("A", d1, 1.0), ("B", d1, 2.0), ("A", d2, 3.0)], schema)
+    src = spark.createDataFrame([("A", d1, 10.0), ("C", d1, 5.0)], schema)
+    keys = ["symbol", "trade_date"]
+    tables = []
+    for name, vals in (("collected", None), ("known", [d1])):
+        path = str(tmp_path / name)
+        assert upsert_partitions(spark, base, path, keys=keys) == 3
+        assert upsert_partitions(spark, src, path, keys=keys, partition_values=vals) == 3
+        tables.append({tuple(r) for r in spark.read.parquet(path).select("symbol", "trade_date", "v").collect()})
+    assert tables[0] == tables[1] == {("A", d1, 10.0), ("B", d1, 2.0), ("C", d1, 5.0), ("A", d2, 3.0)}
+
+
 def test_insert_if_absent(spark, tmp_path):
     path = str(tmp_path / "dim")
     a = spark.createDataFrame([(1, "X")], "id long, name string")
@@ -64,6 +83,9 @@ def test_insert_if_absent(spark, tmp_path):
     assert insert_if_absent(spark, b, path, keys=["id"]) == 1  # only id=2
     got = {(r.id, r.name) for r in spark.read.parquet(path).collect()}
     assert got == {(1, "X"), (2, "Y")}  # first write wins
+    files = sorted(os.listdir(path))
+    assert insert_if_absent(spark, b, path, keys=["id"]) == 0
+    assert sorted(os.listdir(path)) == files  # nothing new: no empty part file
 
 
 def test_table_format_seam_parquet_backend(spark, tmp_path):

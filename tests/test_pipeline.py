@@ -5,19 +5,42 @@ two-run idempotency property (A7)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
+import shutil
 import sys
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
+from securities_pricing_data_pipeline_spark.operators.quality import (  # noqa: E402
+    NEGATIVE_VOLUME,
+    split_rejects,
+)
+from securities_pricing_data_pipeline_spark.plans.metrics import (  # noqa: E402
+    postmerge_counts,
+    premerge_metrics,
+)
 from securities_pricing_data_pipeline_spark.plans.pipeline import run  # noqa: E402
+from securities_pricing_data_pipeline_spark.schemas import (  # noqa: E402
+    DIM_DATE_SCHEMA,
+    DIM_SECURITY_SCHEMA,
+    EOD_PRICES_REJECT_SCHEMA,
+    EOD_PRICES_SCHEMA,
+    FACT_DAILY_PRICE_SCHEMA,
+    RAW_EOD_PRICES_SCHEMA,
+)
 from securities_pricing_data_pipeline_spark.tables import Warehouse  # noqa: E402
 from tests.fixtures import write_eod_csv  # noqa: E402
 
 D1 = dt.date(2026, 1, 5)
 D2 = dt.date(2026, 1, 6)
+D3 = dt.date(2026, 1, 7)
+
+#: Spark jobs one run() of a new date may launch (test_run_job_budget)
+JOB_BUDGET = 27
 
 
 @pytest.fixture(scope="module")
@@ -96,6 +119,15 @@ def test_metrics_and_notify(pipeline_run):
     assert len(messages) == 2 and "SUCCESS" in messages[0]
 
 
+def test_postmerge_counts_recounts_only_missing(pipeline_run):
+    """run() fills core/fact counts from the upserts' observed writes; a
+    count a backend could not observe (None) is re-counted from the
+    table and agrees with the observed one."""
+    spark, wh, _, m1, *_ = pipeline_run
+    assert postmerge_counts(spark, wh.silver, wh.fact_daily_price, D1) == (m1.core_cnt, m1.fact_cnt)
+    assert postmerge_counts(spark, wh.silver, wh.fact_daily_price, D1, written=(7, None)) == (7, 51)
+
+
 def test_idempotent_rerun(pipeline_run):
     """A7: re-running a date leaves silver/gold logically identical."""
     spark, wh, landing, *_ = pipeline_run
@@ -125,3 +157,121 @@ def test_failure_path_notifies(spark, tmp_path):
     with pytest.raises(Exception):
         run(spark, wh, str(tmp_path / "missing_landing"), D1, notifier=messages.append)
     assert len(messages) == 1 and "FAILED" in messages[0]
+
+
+def _clone_warehouse(wh: Warehouse, dest) -> Warehouse:
+    """A private copy of the module fixture's warehouse (D1, D2 loaded),
+    so a test can run more dates without changing what the others see."""
+    shutil.copytree(wh.root, str(dest / "warehouse"))
+    return Warehouse(str(dest / "warehouse"))
+
+
+def test_run_job_budget(pipeline_run, tmp_path):
+    """One run() of a new date into a populated warehouse stays within its
+    Spark job budget. Jobs are the fixed cost of a daily run: each one (a
+    schema-inference read, a count action, an AQE stage) costs scheduling
+    and planning time whatever the data size. This run took 62 jobs
+    before declared-schema reads, the one-action premerge metrics,
+    write-observed counts and one-job emptiness probes; it takes 27 with
+    them (the same at 1, 4 and 8 cores)."""
+    spark, wh, *_ = pipeline_run
+    wh3 = _clone_warehouse(wh, tmp_path)
+    landing = str(tmp_path / "landing")
+    write_eod_csv(landing, D3)
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "test_run_job_budget")
+    try:
+        m = run(spark, wh3, landing, D3, notifier=lambda s: None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert (m.core_cnt, m.fact_cnt, m.est_inserts, m.est_updates) == (51, 51, 51, 0)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= JOB_BUDGET, f"run() launched {jobs} Spark jobs, budget {JOB_BUDGET}"
+
+
+def test_idempotent_rerun_writes_no_dim_or_reject_files(pipeline_run, tmp_path):
+    """A7 at the file level: re-running an already-loaded date must not
+    touch the insert-only tables. dim_security, dim_date and reject keep
+    exactly their files (names, sizes, mtimes) — no empty part file from
+    an empty append, no rewrite."""
+    spark, wh, landing, *_ = pipeline_run
+    wh2 = _clone_warehouse(wh, tmp_path)
+
+    def files(path: str) -> dict[str, tuple[int, int]]:
+        out = {}
+        for base, _, names in os.walk(path):
+            for n in names:
+                st = os.stat(os.path.join(base, n))
+                out[os.path.relpath(os.path.join(base, n), path)] = (st.st_size, st.st_mtime_ns)
+        return out
+
+    tables = [wh2.dim_security, wh2.dim_date, wh2.reject]
+    before = [files(t) for t in tables]
+    assert all(before)
+    m = run(spark, wh2, landing, D2, notifier=lambda s: None)
+    assert m.est_inserts == 0 and m.est_updates == 51
+    assert [files(t) for t in tables] == before
+
+
+def test_warehouse_matches_declared_schemas(pipeline_run):
+    """The pipeline reads every layer with its declared schema, so the
+    files on disk must carry exactly those column names and types
+    (footer inference here is the independent check)."""
+    spark, wh, *_ = pipeline_run
+    declared = {
+        wh.bronze: RAW_EOD_PRICES_SCHEMA,
+        wh.silver: EOD_PRICES_SCHEMA,
+        wh.reject: EOD_PRICES_REJECT_SCHEMA,
+        wh.dim_security: DIM_SECURITY_SCHEMA,
+        wh.dim_date: DIM_DATE_SCHEMA,
+        wh.fact_daily_price: FACT_DAILY_PRICE_SCHEMA,
+    }
+    for path, schema in declared.items():
+        on_disk = {f.name: f.dataType for f in spark.read.parquet(path).schema.fields}
+        assert on_disk == {f.name: f.dataType for f in schema.fields}, path
+
+
+def _premerge_four_counts(valid, rejects, silver_keys):
+    """The earlier four-count definition, kept as the reference."""
+    raw_cnt_valid = valid.count()
+    reject_cnt = rejects.count()
+    keys = valid.select("symbol", "trade_date").distinct()
+    existing = keys.join(silver_keys, ["symbol", "trade_date"], "left_semi").count()
+    total_keys = keys.count()
+    return raw_cnt_valid + reject_cnt, reject_cnt, total_keys - existing, existing
+
+
+def test_premerge_one_pass_matches_four_counts(spark):
+    """premerge_metrics (one aggregate action) equals the four-count
+    definition on a restatement: duplicate keys, a reject-only key, a key
+    with both a valid and a rejected row, a NULL volume (valid) and a
+    NULL symbol on both sides (never 'already in silver')."""
+    d = D1
+    bronze = spark.createDataFrame(
+        [
+            ("AAA", d, 10),   # in silver, duplicated → one update key
+            ("AAA", d, 11),
+            ("BBB", d, 5),    # in silver → update
+            ("CCC", d, None), # NULL volume is valid; new → insert
+            ("DDD", d, -1),   # reject-only key (also in silver): no estimate
+            ("EEE", d, 7),    # valid + rejected row; in silver → update
+            ("EEE", d, -7),
+            ("FFF", d, 3),    # new → insert
+            ("FFF", d, 3),
+            (None, d, 1),     # NULL key: insert (equi-join never matches)
+        ],
+        "symbol string, trade_date date, volume int",
+    )
+    silver_keys = spark.createDataFrame(
+        [("AAA", d), ("BBB", d), ("DDD", d), ("EEE", d), ("ZZZ", d), (None, d)],
+        "symbol string, trade_date date",
+    )
+    valid, rejects = split_rejects(bronze, F.col("volume") >= 0, NEGATIVE_VOLUME)
+    got = premerge_metrics(valid, rejects, silver_keys)
+    assert got == _premerge_four_counts(valid, rejects, silver_keys)
+    assert got == (10, 2, 3, 3)
+    # first load: no silver yet
+    empty = silver_keys.limit(0)
+    assert premerge_metrics(valid, rejects, None) == _premerge_four_counts(valid, rejects, empty)
