@@ -18,8 +18,11 @@ byte stuffing. The decoder is the exact inverse; its only non-vector
 loop is the Huffman scan, which is inherently sequential.
 
 Quality 100 scales every quantizer to 1, so a roundtrip loses only the
-YCbCr round-off and DCT float noise — the roundtrip test pins max
-|error| ≤ 4 levels without needing a reference codec.
+coefficient round-off. Both directions keep YCbCr samples in float and
+round to integer pixels once, after colour conversion back to RGB;
+rounding the YCbCr planes in between adds two more half-level errors
+that the 1.402/1.772 chroma gains amplify past 4 levels. The roundtrip
+test pins max |error| ≤ 4 levels without needing a reference codec.
 
 All constants are from the public spec (T.81 Annex K); the zigzag
 permutation is derived programmatically rather than transcribed.
@@ -226,17 +229,23 @@ def _blocks_of(plane: np.ndarray) -> np.ndarray:
     return plane.reshape(hh // 8, 8, ww // 8, 8).transpose(0, 2, 1, 3)
 
 
-def rgb_to_ycbcr(px: np.ndarray) -> np.ndarray:
-    """JFIF full-range YCbCr, rounded and clamped to uint8."""
+def _rgb_to_ycbcr_float(px: np.ndarray) -> np.ndarray:
+    """JFIF full-range YCbCr, unrounded."""
     p = px.astype(np.float64)
     r, g, b = p[..., 0], p[..., 1], p[..., 2]
     y = 0.299 * r + 0.587 * g + 0.114 * b
     cb = -0.168735892 * r - 0.331264108 * g + 0.5 * b + 128.0
     cr = 0.5 * r - 0.418687589 * g - 0.081312411 * b + 128.0
-    return np.clip(np.round(np.stack([y, cb, cr], axis=-1)), 0, 255).astype(np.uint8)
+    return np.stack([y, cb, cr], axis=-1)
+
+
+def rgb_to_ycbcr(px: np.ndarray) -> np.ndarray:
+    """JFIF full-range YCbCr, rounded and clamped to uint8."""
+    return np.clip(np.round(_rgb_to_ycbcr_float(px)), 0, 255).astype(np.uint8)
 
 
 def ycbcr_to_rgb(px: np.ndarray) -> np.ndarray:
+    """JFIF YCbCr (uint8 or float) → RGB, rounded and clamped to uint8."""
     p = px.astype(np.float64)
     y, cb, cr = p[..., 0], p[..., 1] - 128.0, p[..., 2] - 128.0
     r = y + 1.402 * cr
@@ -254,7 +263,7 @@ def encode_jpeg(pixels: np.ndarray, quality: int = 90) -> bytes:
     h, w = pixels.shape[:2]
     if h == 0 or w == 0 or h > 65535 or w > 65535:
         raise ValueError(f"bad geometry {w}x{h}")
-    ycc = pixels[..., None] if grey else rgb_to_ycbcr(pixels)
+    ycc = pixels[..., None] if grey else _rgb_to_ycbcr_float(pixels)
     ncomp = ycc.shape[2]
     qtabs = (_scaled_quant(_QUANT_LUMA, quality), _scaled_quant(_QUANT_CHROMA, quality))
 
@@ -527,11 +536,8 @@ def decode_jpeg(buf: bytes) -> np.ndarray:
                 planes[ci][my * 8 : my * 8 + 8, mx * 8 : mx * 8 + 8] = px
 
     img = np.stack([p[:h, :w] for p in planes], axis=-1)
-    img = np.clip(np.round(img), 0, 255).astype(np.uint8)
     if img.shape[2] == 1:
-        img = np.repeat(img, 3, axis=2)
-    elif img.shape[2] == 3:
-        img = ycbcr_to_rgb(img)
-    else:
-        raise NotImplementedError(f"{img.shape[2]}-component JPEG")
-    return img
+        return np.repeat(np.clip(np.round(img), 0, 255).astype(np.uint8), 3, axis=2)
+    if img.shape[2] == 3:
+        return ycbcr_to_rgb(img)
+    raise NotImplementedError(f"{img.shape[2]}-component JPEG")

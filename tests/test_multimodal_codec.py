@@ -233,6 +233,19 @@ def test_jpeg_roundtrip_property():
     run()
 
 
+def test_jpeg_roundtrip_no_intermediate_ycbcr_rounding():
+    """A 26x26 noise image whose roundtrip reached 5 levels when the
+    YCbCr planes were rounded to integers on both sides of the DCT."""
+    from securities_pricing_data_pipeline_spark.llmdata.jpeg import (
+        decode_jpeg,
+        encode_jpeg,
+    )
+
+    px = np.random.RandomState(1882692453).randint(0, 256, (26, 26, 3)).astype(np.uint8)
+    out = decode_jpeg(encode_jpeg(px, quality=100))
+    assert int(np.abs(out.astype(int) - px.astype(int)).max()) <= 3
+
+
 # ---------------------------------------------------------------- PNG
 
 
