@@ -27,58 +27,48 @@ from pyspark.sql import functions as F
 
 from securities_pricing_data_pipeline_spark.queries.bars import BARS_SQL, bars_silver
 from securities_pricing_data_pipeline_spark.queries.helpers import (
-    SessionSilverRegistry,
     dec,
     dsum,
     load,
     right_size_silver,
+    silver,
     sql_dsum,
 )
 
-# Per-session co-purchase/co-supply edge-list silvers (the _DEDUP_SILVER
-# pattern): building the canonical edge list — distinct (order, key) →
-# self-join on order → pair distinct — costs ~4.5s at sf0.1, and SIX
-# graph queries each paid it while their actual graph math runs ~1s.
-# Keyed by (applicationId, sf_dir, key column, node filter) so sessions
-# and scale factors never cross-contaminate; other-session keys are
-# evicted on insert (SessionSilverRegistry).
-_GRAPH_SILVER: dict[tuple, DataFrame] = SessionSilverRegistry()
-
-
+@silver
 def _copurchase_edges(
     spark: SparkSession, sf_dir: str, key_col: str, even_only: bool = False
 ) -> DataFrame:
     """Canonical (u < v, distinct) co-occurrence edge list over lineitem
-    ``key_col``, persisted once per (session, sf, variant)."""
+    ``key_col``, persisted once per (session, sf, variant). Building it —
+    distinct (order, key) → self-join on order → pair distinct — costs
+    ~4.5s at sf0.1, and SIX graph queries each paid it while their
+    actual graph math runs ~1s."""
     from pyspark import StorageLevel
 
-    key = ("edges", spark.sparkContext.applicationId, sf_dir, key_col, even_only)
-    df = _GRAPH_SILVER.get(key)
-    if df is None:
-        li = load(spark, sf_dir, "lineitem")
-        if even_only:
-            li = li.filter(F.col(key_col) % 2 == 0)
-        li = li.select("l_orderkey", key_col).distinct()
-        a = li.select(F.col("l_orderkey").alias("ok"), F.col(key_col).alias("u"))
-        b = li.select(F.col("l_orderkey").alias("ok"), F.col(key_col).alias("v"))
-        df = (
-            a.join(b, "ok")
-            .filter(F.col("u") < F.col("v"))
-            .select("u", "v")
-            .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # r14: materialize NOW and right-size the cached read width — an
-        # un-materialized silver lets one action's concurrent AQE stages
-        # each rebuild it from parquet (measured: 8 identical 64-task
-        # degree stages inside one graph_edge_jaccard_parts run), and 32
-        # partitions of a few-MB edge list make every degree pass
-        # task-overhead-bound (guide §2.2).
-        df = right_size_silver(df)
-        _GRAPH_SILVER[key] = df
-    return df
+    li = load(spark, sf_dir, "lineitem")
+    if even_only:
+        li = li.filter(F.col(key_col) % 2 == 0)
+    li = li.select("l_orderkey", key_col).distinct()
+    a = li.select(F.col("l_orderkey").alias("ok"), F.col(key_col).alias("u"))
+    b = li.select(F.col("l_orderkey").alias("ok"), F.col(key_col).alias("v"))
+    df = (
+        a.join(b, "ok")
+        .filter(F.col("u") < F.col("v"))
+        .select("u", "v")
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    # r14: materialize NOW and right-size the cached read width — an
+    # un-materialized silver lets one action's concurrent AQE stages
+    # each rebuild it from parquet (measured: 8 identical 64-task
+    # degree stages inside one graph_edge_jaccard_parts run), and 32
+    # partitions of a few-MB edge list make every degree pass
+    # task-overhead-bound (guide §2.2).
+    return right_size_silver(df)
 
 
+@silver
 def _cosupply_sym_edges(
     spark: SparkSession, sf_dir: str, key_col: str, even_only: bool = False
 ) -> DataFrame:
@@ -94,25 +84,21 @@ def _cosupply_sym_edges(
     shuffle width keeps per-iteration task counts flat."""
     from pyspark import StorageLevel
 
-    key = ("sym", spark.sparkContext.applicationId, sf_dir, key_col, even_only)
-    df = _GRAPH_SILVER.get(key)
-    if df is None:
-        und = _copurchase_edges(spark, sf_dir, key_col, even_only)
-        # size-aware width (what AQE does for shuffle outputs, applied to
-        # the explicit repartition): iteration stages over a small graph
-        # are task-overhead-bound — 907k supplier edges ran 2.7s/query in
-        # 8 partitions vs 3.5s in 32 — while a 100 TB edge list clamps to
-        # the full session shuffle width. ~250k edge rows per partition.
-        n_edges = 2 * und.count()  # also pins the canonical silver
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        width = max(1, min(n_part, -(-n_edges // 250_000)))
-        df = (
-            und.unionAll(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-            .repartition(width)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        df.count()  # pin eagerly: consumers skip their own materialization
-        _GRAPH_SILVER[key] = df
+    und = _copurchase_edges(spark, sf_dir, key_col, even_only)
+    # size-aware width (what AQE does for shuffle outputs, applied to
+    # the explicit repartition): iteration stages over a small graph
+    # are task-overhead-bound — 907k supplier edges ran 2.7s/query in
+    # 8 partitions vs 3.5s in 32 — while a 100 TB edge list clamps to
+    # the full session shuffle width. ~250k edge rows per partition.
+    n_edges = 2 * und.count()  # also pins the canonical silver
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    width = max(1, min(n_part, -(-n_edges // 250_000)))
+    df = (
+        und.unionAll(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        .repartition(width)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    df.count()  # pin eagerly: consumers skip their own materialization
     return df
 
 

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from securities_pricing_data_pipeline_spark.queries.helpers import load
+from securities_pricing_data_pipeline_spark.queries.helpers import load, silver
 
 PRICE4 = T.DecimalType(18, 4)
 
@@ -74,55 +74,46 @@ def bars_df(spark: SparkSession, sf_dir: str, partkeys: list[int] | None = None)
     )
 
 
-# one materialized silver per (session, sf_dir): the medallion contract is
-# that serving queries read the silver table, not re-aggregate raw rows.
-# At cluster scale this is a written silver table; in-session it's a
-# persisted DataFrame (memory, spill to disk).
-_SILVER_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@silver
 def bars_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared materialized bars. First caller pays the lineitem scan +
-    aggregate; every later serving query in the session reuses it."""
+    """Shared materialized bars: serving queries read this silver, not
+    raw rows. First caller pays the lineitem scan + aggregate; every
+    later serving query in the session reuses it."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SILVER_CACHE.get(key)
-    if df is None:
-        # r15 (guide §2.4 — remove shuffles outright; §6 — layout for the
-        # readers): ~25 serving queries window/group this silver BY SYMBOL,
-        # and each paid its own Exchange hashpartitioning(symbol) per run.
-        # Worse, AQE coalesces that tiny (~2 MB at bench sf) exchange by
-        # BYTES, blind to the 30-lag window expressions above it, so the
-        # compute-dense indicator family ran near-single-core (r14 tried a
-        # session-wide 64k minPartitionSize floor to counter this; the r15
-        # paired A/B showed the floor costs more suite-wide than it buys).
-        # Persisting the silver hash-partitioned by symbol at the session's
-        # configured width removes the consumers' exchange entirely — the
-        # cached InMemoryTableScan reports hashpartitioning(symbol, n), so
-        # EnsureRequirements is satisfied and there is no shuffle left for
-        # AQE to under-parallelize; the sortWithinPartitions lets the
-        # cached plan's outputOrdering absorb the window Sort too. One
-        # build-time exchange buys every symbol-keyed consumer's back.
-        # repartition(n, key) is REPARTITION_BY_NUM — AQE never coalesces
-        # it — and n follows spark.sql.shuffle.partitions (cluster-sized
-        # in production, core count locally): the bucketed-silver layout,
-        # in-session.
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        df = (
-            bars_df(spark, sf_dir)
-            .repartition(n, "symbol")
-            .sortWithinPartitions("symbol", "trade_date")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # materialize at build (the _copurchase_edges precedent): until
-        # the cache is materialized the AQE-wrapped cached plan reports
-        # no output partitioning, so the FIRST consumer would plan (and
-        # execute) a defensive symbol exchange; after this count() every
-        # consumer — including the first — sees hashpartitioning(symbol,
-        # n) + the sort order and plans no exchange and no sort.
-        df.count()
-        _SILVER_CACHE[key] = df
+    # r15 (guide §2.4 — remove shuffles outright; §6 — layout for the
+    # readers): ~25 serving queries window/group this silver BY SYMBOL,
+    # and each paid its own Exchange hashpartitioning(symbol) per run.
+    # Worse, AQE coalesces that tiny (~2 MB at bench sf) exchange by
+    # BYTES, blind to the 30-lag window expressions above it, so the
+    # compute-dense indicator family ran near-single-core (r14 tried a
+    # session-wide 64k minPartitionSize floor to counter this; the r15
+    # paired A/B showed the floor costs more suite-wide than it buys).
+    # Persisting the silver hash-partitioned by symbol at the session's
+    # configured width removes the consumers' exchange entirely — the
+    # cached InMemoryTableScan reports hashpartitioning(symbol, n), so
+    # EnsureRequirements is satisfied and there is no shuffle left for
+    # AQE to under-parallelize; the sortWithinPartitions lets the
+    # cached plan's outputOrdering absorb the window Sort too. One
+    # build-time exchange buys every symbol-keyed consumer's back.
+    # repartition(n, key) is REPARTITION_BY_NUM — AQE never coalesces
+    # it — and n follows spark.sql.shuffle.partitions (cluster-sized
+    # in production, core count locally): the bucketed-silver layout,
+    # in-session.
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    df = (
+        bars_df(spark, sf_dir)
+        .repartition(n, "symbol")
+        .sortWithinPartitions("symbol", "trade_date")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    # materialize at build (the _copurchase_edges precedent): until
+    # the cache is materialized the AQE-wrapped cached plan reports
+    # no output partitioning, so the FIRST consumer would plan (and
+    # execute) a defensive symbol exchange; after this count() every
+    # consumer — including the first — sees hashpartitioning(symbol,
+    # n) + the sort order and plans no exchange and no sort.
+    df.count()
     return df
 
 

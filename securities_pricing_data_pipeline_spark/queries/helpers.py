@@ -22,6 +22,10 @@ aggregation (decimal sums still combine map-side).
 
 from __future__ import annotations
 
+import functools
+import inspect
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -169,17 +173,39 @@ def sql_davg(expr: str, scale: int) -> str:
     return f"(CAST(SUM(CAST({expr} AS DECIMAL(38,{scale}))) AS DOUBLE) / COUNT({expr}))"
 
 
-class SessionSilverRegistry(dict):
-    """Per-session silver cache: a dict keyed by tuples whose SECOND
-    element is the owning Spark applicationId (the `_DEDUP_SILVER` /
-    `_GRAPH_SILVER` key convention). On insert, entries belonging to any
-    OTHER applicationId are evicted — their RDDs die with their
-    SparkContext anyway, but without eviction the dict slots pin stale
-    DataFrame handles for the process lifetime (a bounded leak when test
-    suites cycle many sessions; VERDICT r9 item 2)."""
+_SILVERS: dict[tuple, DataFrame] = {}  # (builder, app id, sf_dir, *params) → frame
 
-    def __setitem__(self, key: tuple, value) -> None:
-        app = key[1]
-        for stale in [k for k in self if k[1] != app]:
-            super().__delitem__(stale)
-        super().__setitem__(key, value)
+
+def silver(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    """Per-session silver: ``fn(spark, sf_dir, *params)`` builds once per
+    key and every later equal call returns the same frame.
+
+    The key is (fn, the session's ``applicationId``, sf_dir, params bound
+    with defaults applied). Storing an entry evicts every entry owned by
+    another applicationId: their RDDs died with their SparkContext, and
+    the handles would otherwise stay pinned for the process lifetime.
+    The body chooses and performs the pin (persist level, layout,
+    ``localCheckpoint``, eager ``count``). ``fn.cache_clear()`` drops
+    fn's entries, as with ``functools.lru_cache``."""
+    sig = inspect.signature(fn)
+
+    @functools.wraps(fn)
+    def get(*args, **kwargs) -> DataFrame:
+        bound = sig.bind(*args, **kwargs)
+        bound.apply_defaults()
+        spark, *params = bound.arguments.values()
+        app = spark.sparkContext.applicationId
+        key = (fn, app, *params)
+        if key not in _SILVERS:
+            df = fn(*args, **kwargs)
+            for stale in [k for k in _SILVERS if k[1] != app]:
+                del _SILVERS[stale]
+            _SILVERS[key] = df
+        return _SILVERS[key]
+
+    def cache_clear() -> None:
+        for k in [k for k in _SILVERS if k[0] is fn]:
+            del _SILVERS[k]
+
+    get.cache_clear = cache_clear
+    return get

@@ -60,53 +60,41 @@ from securities_pricing_data_pipeline_spark.llmdata.text import (
 )
 from securities_pricing_data_pipeline_spark.operators.asof import asof_join_backward
 from securities_pricing_data_pipeline_spark.queries.bars import BARS_SQL, bars_df, bars_silver
-from securities_pricing_data_pipeline_spark.queries.helpers import (
-    SessionSilverRegistry,
-    load,
-)
+from securities_pricing_data_pipeline_spark.queries.helpers import load, silver
 
 
 # ---- dedup silver artifacts -------------------------------------------------
 # A real 100 TB dedup pipeline tokenizes the corpus and materializes
 # MinHash signatures ONCE (a written silver table), then runs LSH pairing,
 # clustering, audits, and evaluation against that artifact. In-session the
-# same contract is a persisted DataFrame keyed by (application, sf_dir) —
-# the exact precedent of queries.bars.bars_silver. Every dedup query below
-# reads these instead of re-deriving the corpus per query. The registry
-# evicts other-session keys on insert (see SessionSilverRegistry).
-_DEDUP_SILVER: dict[tuple, DataFrame] = SessionSilverRegistry()
+# same contract is a per-session ``@silver`` frame, like
+# queries.bars.bars_silver. Every dedup query below reads these instead
+# of re-deriving the corpus per query.
 
 
+@silver
 def _shingled_docs(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     """Shared word-n-gram shingling of the documents table (doc_id +
     shingles only — the text column is dropped before persisting)."""
     from pyspark import StorageLevel
 
-    key = ("shingles", spark.sparkContext.applicationId, sf_dir, n)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        docs = load(spark, sf_dir, "documents")
-        df = shingles(docs, text_col="text", n=n).select("doc_id", "shingles").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        _DEDUP_SILVER[key] = df
-    return df
+    docs = load(spark, sf_dir, "documents")
+    return shingles(docs, text_col="text", n=n).select("doc_id", "shingles").persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
 
+@silver
 def _portable_sigs(spark: SparkSession, sf_dir: str, num_hashes: int = 64) -> DataFrame:
     """Shared portable MinHash signatures over the shared shingles."""
     from pyspark import StorageLevel
 
-    key = ("minhash", spark.sparkContext.applicationId, sf_dir, num_hashes)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        df = minhash_signatures(
-            _shingled_docs(spark, sf_dir), id_col="doc_id", num_hashes=num_hashes, portable=True
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _DEDUP_SILVER[key] = df
-    return df
+    return minhash_signatures(
+        _shingled_docs(spark, sf_dir), id_col="doc_id", num_hashes=num_hashes, portable=True
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
+@silver
 def _simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared portable SimHash fingerprints over the shared shingles —
     both the near-dup pair query and its precision/recall eval read
@@ -114,20 +102,16 @@ def _simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SimHash pass."""
     from pyspark import StorageLevel
 
-    key = ("simhash", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        from securities_pricing_data_pipeline_spark.llmdata.dedup import simhash
+    from securities_pricing_data_pipeline_spark.llmdata.dedup import simhash
 
-        df = simhash(
-            load(spark, sf_dir, "documents"),
-            portable=True,
-            shingled=_shingled_docs(spark, sf_dir),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _DEDUP_SILVER[key] = df
-    return df
+    return simhash(
+        load(spark, sf_dir, "documents"),
+        portable=True,
+        shingled=_shingled_docs(spark, sf_dir),
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
+@silver
 def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared MinHash-LSH near-dup pair list (n=3, threshold 0.5,
     portable hashes over the shared signatures) — the materialized
@@ -136,35 +120,27 @@ def _lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the written pair table every downstream dedup consumer reads."""
     from pyspark import StorageLevel
 
-    key = ("lsh_pairs", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        docs = load(spark, sf_dir, "documents")
-        df = minhash_lsh_pairs(
-            docs, n=3, threshold=0.5, portable=True,
-            signatures=_portable_sigs(spark, sf_dir),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _DEDUP_SILVER[key] = df
-    return df
+    docs = load(spark, sf_dir, "documents")
+    return minhash_lsh_pairs(
+        docs, n=3, threshold=0.5, portable=True,
+        signatures=_portable_sigs(spark, sf_dir),
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
+@silver
 def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared exact n-gram Jaccard pair list (n=3, threshold 0.8) — the
     ground-truth artifact: reported by ``dedup_ngram_jaccard`` and read
     again as the truth set by ``dedup_minhash_eval``."""
     from pyspark import StorageLevel
 
-    key = ("jaccard_pairs", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        docs = load(spark, sf_dir, "documents")
-        df = ngram_jaccard_pairs(
-            docs, n=3, threshold=0.8, shingled=_shingled_docs(spark, sf_dir)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _DEDUP_SILVER[key] = df
-    return df
+    docs = load(spark, sf_dir, "documents")
+    return ngram_jaccard_pairs(
+        docs, n=3, threshold=0.8, shingled=_shingled_docs(spark, sf_dir)
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
+@silver
 def _cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared (doc_id, cluster_id) map: connected components over the
     shared pair list. Iterative label propagation re-runs from scratch
@@ -176,17 +152,13 @@ def _cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components_auto,
     )
 
-    key = ("cc", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        docs = load(spark, sf_dir, "documents")
-        df = connected_components_auto(
-            _lsh_pairs(spark, sf_dir), docs.select("doc_id"), id_col="doc_id"
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _DEDUP_SILVER[key] = df
-    return df
+    docs = load(spark, sf_dir, "documents")
+    return connected_components_auto(
+        _lsh_pairs(spark, sf_dir), docs.select("doc_id"), id_col="doc_id"
+    ).persist(StorageLevel.MEMORY_AND_DISK)
 
 
+@silver
 def _bm25_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared (doc, term, tf) postings silver — the artifact a sparse
     retrieval stack writes once and every scorer reads. BM25 retrieval
@@ -195,12 +167,7 @@ def _bm25_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ADVICE r9 #1); now the pin happens once per (session, corpus)."""
     from securities_pricing_data_pipeline_spark.llmdata.text import term_tf_postings
 
-    key = ("postings", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        df = term_tf_postings(load(spark, sf_dir, "documents"))
-        _DEDUP_SILVER[key] = df
-    return df
+    return term_tf_postings(load(spark, sf_dir, "documents"))
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,21 +210,17 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_near_dups(emb, threshold=0.4)
 
 
+@silver
 def _semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared SemDeDup pair silver (same contract as _lsh_pairs): the
     clustered in-cluster prune is the expensive artifact, and both the
     pair report and the keep-list read it — build once per session."""
     from pyspark import StorageLevel
 
-    key = ("sempairs", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        emb = load(spark, sf_dir, "embeddings")
-        df = semantic_dedup_pairs(emb, threshold=0.4).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        _DEDUP_SILVER[key] = df
-    return df
+    emb = load(spark, sf_dir, "embeddings")
+    return semantic_dedup_pairs(emb, threshold=0.4).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
 
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -330,6 +293,7 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _bf_truth10_silver(spark, sf_dir)
 
 
+@silver
 def _bf_truth10_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared EXACT-truth frame (r15, guide §2.4): brute-force top-5
     cosine neighbors of the ten audit queries (vec_id < 10). ELEVEN
@@ -343,54 +307,41 @@ def _bf_truth10_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (session, sf), the same ground-truth-artifact policy as
     ``_jaccard_pairs``. Full output columns so every consumer's select
     stays unchanged."""
-    key = ("bf_truth10", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        from securities_pricing_data_pipeline_spark.llmdata.similarity import (
-            brute_force_topk as _bf,
-        )
+    from securities_pricing_data_pipeline_spark.llmdata.similarity import (
+        brute_force_topk as _bf,
+    )
 
-        emb = load(spark, sf_dir, "embeddings")
-        df = _bf(emb, emb.filter(F.col("vec_id") < 10), k=5).localCheckpoint(
-            eager=True
-        )
-        _DEDUP_SILVER[key] = df
-    return df
+    emb = load(spark, sf_dir, "embeddings")
+    return _bf(emb, emb.filter(F.col("vec_id") < 10), k=5).localCheckpoint(
+        eager=True
+    )
 
 
 def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lsh_topk10_silver(spark, sf_dir)
 
 
+@silver
 def _ivf_topk10_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned IVF retrieval over the ten audit queries (r15): the SAME
     (k=5, n_centroids=16, nprobe=4) retrieval is the sim_ivf_topk report
     AND the recall audit's approx side — one list build + scan per
     (session, sf), like the crossmodal/ivfpq retrieval silvers."""
-    key = ("ivf_topk10", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        emb = load(spark, sf_dir, "embeddings")
-        df = ivf_topk(
-            emb, emb.filter(F.col("vec_id") < 10), k=5, n_centroids=16, nprobe=4
-        ).localCheckpoint(eager=True)
-        _DEDUP_SILVER[key] = df
-    return df
+    emb = load(spark, sf_dir, "embeddings")
+    return ivf_topk(
+        emb, emb.filter(F.col("vec_id") < 10), k=5, n_centroids=16, nprobe=4
+    ).localCheckpoint(eager=True)
 
 
+@silver
 def _lsh_topk10_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned LSH retrieval over the ten audit queries (r15): consumed
     identically by sim_lsh_topk, the RRF fusion's second arm, and the
     RBO agreement audit — one hyperplane-bucket scan per (session, sf)."""
-    key = ("lsh_topk10", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        emb = load(spark, sf_dir, "embeddings")
-        df = lsh_topk(
-            emb, emb.filter(F.col("vec_id") < 10), k=5
-        ).localCheckpoint(eager=True)
-        _DEDUP_SILVER[key] = df
-    return df
+    emb = load(spark, sf_dir, "embeddings")
+    return lsh_topk(
+        emb, emb.filter(F.col("vec_id") < 10), k=5
+    ).localCheckpoint(eager=True)
 
 
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -516,6 +467,7 @@ def corpus_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
+@silver
 def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reciprocal-rank fusion of two retrieval lists (exact brute-force
     cosine top-5 and hyperplane-LSH top-5): the standard way to merge
@@ -528,12 +480,7 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_queries×5 rows) is pinned as a per-session silver — the rerank
     (``sim_rerank_blend``) and diversification (``sim_mmr_diversify``)
     stages consume the SAME fused candidates, so the two-retriever
-    pipeline runs once per session, not once per serving stage (the
-    ``_DEDUP_SILVER`` discipline)."""
-    key = ("fused", spark.sparkContext.applicationId, sf_dir)
-    cached = _DEDUP_SILVER.get(key)
-    if cached is not None:
-        return cached
+    pipeline runs once per session, not once per serving stage."""
     bf = _bf_truth10_silver(spark, sf_dir).select("query_id", "neighbor_id", "rank")
     ls = _lsh_topk10_silver(spark, sf_dir).select("query_id", "neighbor_id", "rank")
     u = bf.unionByName(ls)
@@ -543,7 +490,7 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("int").alias("n_lists"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("rrf_units"), "neighbor_id")
-    out = (
+    return (
         scored.withColumn("fused_rank", F.row_number().over(w))
         .filter(F.col("fused_rank") <= 5)
         .select(
@@ -555,8 +502,6 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)  # candidate-set-sized pin
     )
-    _DEDUP_SILVER[key] = out
-    return out
 
 
 def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1225,8 +1170,6 @@ def sim_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     is small enough to compute truth). One row: query count, k, hits,
     recall@k. Counts are ints; the ratio is one int÷int division —
     engine-stable."""
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
     truth = _bf_truth10_silver(spark, sf_dir).select(
         "query_id", "neighbor_id"
     )  # shared session truth silver (r15): one exact pass per session
@@ -4737,6 +4680,7 @@ ORDER BY doc_id, cut_start
 """
 
 
+@silver
 def _ivfpq_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned IVF-PQ retrieval frame (r15, VERDICT r14 item 5):
     ``sim_ivfpq_topk`` and ``sim_ivfpq_ndcg`` run the IDENTICAL
@@ -4748,20 +4692,15 @@ def _ivfpq_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     silvers; full output columns so both consumers read one frame. Twin
     test ``tests/test_llmdata.py::test_ivfpq_silver_matches_fresh_retrieval``
     pins it row-for-row to a fresh retrieval."""
-    key = ("ivfpq_topk", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        from securities_pricing_data_pipeline_spark.llmdata.similarity import (
-            ivfpq_topk,
-        )
+    from securities_pricing_data_pipeline_spark.llmdata.similarity import (
+        ivfpq_topk,
+    )
 
-        emb = load(spark, sf_dir, "embeddings")
-        df = ivfpq_topk(
-            emb, emb.filter(F.col("vec_id") % 50 == 0), k=5,
-            dim=20, n_sub=4, n_codes=16, n_centroids=16, nprobe=4,
-        ).localCheckpoint(eager=True)
-        _DEDUP_SILVER[key] = df
-    return df
+    emb = load(spark, sf_dir, "embeddings")
+    return ivfpq_topk(
+        emb, emb.filter(F.col("vec_id") % 50 == 0), k=5,
+        dim=20, n_sub=4, n_codes=16, n_centroids=16, nprobe=4,
+    ).localCheckpoint(eager=True)
 
 
 def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5561,10 +5500,30 @@ def dedup_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses, and frame pairs roll up to video pairs by MIN Hamming. The
     signature frame is pinned before pairing (the dedup_audio_phash
     lesson: simhash_near_dups scans sigs 3×)."""
+    return _video_pairs(spark, sf_dir)
+
+
+# Pack (video, frame) on the DENSE pick ordinal with stride n_frames:
+# pick_idx < n_frames by construction, so keys never alias into a
+# neighboring video id — packing on the ORIGINAL container frame_idx
+# (i·total//n_frames) would collide for any video with more than
+# n_frames·stride/n_frames frames (ADVICE r11). For these 4-frame assets
+# pick_idx == frame_idx, so the oracle's f∈0..3 replay is unchanged. The
+# unpack divisor in _video_pairs must be the SAME constant as the pack
+# stride, so both read _VIDEO_STRIDE (ADVICE r12).
+_VIDEO_STRIDE = 4
+
+
+@silver
+def _video_fsigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-session frame-signature silver: the container walk + decode +
+    dHash runs ONCE per (app, sf) and serves every video consumer
+    (dedup_video_phash, dedup_video_keep) — the same index-artifact
+    discipline as _nsw_edge_silver; simhash_near_dups scans its sigs
+    input 3×, so the pin also prevents the audio-phash 3×-decode bug."""
     import pandas as pd
     from pyspark.sql import types as T
 
-    from securities_pricing_data_pipeline_spark.llmdata.dedup import simhash_near_dups
     from securities_pricing_data_pipeline_spark.llmdata.video import (
         encode_avi_mjpeg,
         video_frame_dhash,
@@ -5611,58 +5570,42 @@ def dedup_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         ),
     )
-    # per-session frame-signature silver: the container walk + decode +
-    # dHash runs ONCE per (app, sf) and serves every video consumer
-    # (this query, dedup_video_keep) — the same index-artifact
-    # discipline as _nsw_edge_silver; simhash_near_dups scans its sigs
-    # input 3×, so the pin also prevents the audio-phash 3×-decode bug.
-    # pack (video, frame) on the DENSE pick ordinal with stride
-    # n_frames: pick_idx < n_frames by construction, so keys never alias
-    # into a neighboring video id — packing on the ORIGINAL container
-    # frame_idx (i·total//n_frames) would collide for any video with
-    # more than n_frames·stride/n_frames frames (ADVICE r11). For these
-    # 4-frame assets pick_idx == frame_idx, so the oracle's f∈0..3
-    # replay is unchanged.
-    _STRIDE = 4
     n_frames = 4
-    # pick_idx < n_frames is what keeps packed keys alias-free, and the
-    # unpack divisor must be the SAME constant as the pack stride —
-    # derive both from _STRIDE so neither can drift alone (ADVICE r12)
-    assert _STRIDE == n_frames, "pack stride must equal sampled frame count"
-    key = ("video_fsigs", spark.sparkContext.applicationId, sf_dir)
-    fsigs = _DEDUP_SILVER.get(key)
-    if fsigs is None:
-        fsigs = (
-            video_frame_dhash(assets, n_frames=n_frames)
-            .select(
-                (F.col("id") * _STRIDE + F.col("pick_idx")).alias("id"),
-                "simhash",
-            )
-            .localCheckpoint(eager=True)
+    # pick_idx < n_frames is what keeps packed keys alias-free
+    assert _VIDEO_STRIDE == n_frames, "pack stride must equal sampled frame count"
+    return (
+        video_frame_dhash(assets, n_frames=n_frames)
+        .select(
+            (F.col("id") * _VIDEO_STRIDE + F.col("pick_idx")).alias("id"),
+            "simhash",
         )
-        _DEDUP_SILVER[key] = fsigs
-    # r15 (guide §2.4): the keyframe PAIRING feeds two query paths —
-    # this report and dedup_video_keep's clustering input — and ran per
-    # call; now one banded pairing per (session, sf), the same shared
-    # ground-truth-artifact policy as _lsh_pairs/_jaccard_pairs.
-    pkey = ("video_pairs", spark.sparkContext.applicationId, sf_dir)
-    pairs = _DEDUP_SILVER.get(pkey)
-    if pairs is None:
-        fpairs = simhash_near_dups(fsigs, sigs=fsigs, max_hamming=3)
-        va = F.expr(f"id_a div {_STRIDE}")
-        vb = F.expr(f"id_b div {_STRIDE}")
-        pairs = (
-            fpairs.filter(va != vb)
-            .groupBy(va.alias("id_a"), vb.alias("id_b"))
-            .agg(
-                F.min("hamming").cast("int").alias("min_hamming"),
-                F.count("*").alias("n_frame_matches"),
-            )
-            .orderBy("id_a", "id_b")
-            .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)
+    )
+
+
+@silver
+def _video_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-session video near-dup pair silver (r15, guide §2.4): the
+    keyframe PAIRING feeds two query paths — dedup_video_phash and
+    dedup_video_keep's clustering input — so it runs one banded pairing
+    per (session, sf), the same shared ground-truth-artifact policy as
+    _lsh_pairs/_jaccard_pairs."""
+    from securities_pricing_data_pipeline_spark.llmdata.dedup import simhash_near_dups
+
+    fsigs = _video_fsigs(spark, sf_dir)
+    fpairs = simhash_near_dups(fsigs, sigs=fsigs, max_hamming=3)
+    va = F.expr(f"id_a div {_VIDEO_STRIDE}")
+    vb = F.expr(f"id_b div {_VIDEO_STRIDE}")
+    return (
+        fpairs.filter(va != vb)
+        .groupBy(va.alias("id_a"), vb.alias("id_b"))
+        .agg(
+            F.min("hamming").cast("int").alias("min_hamming"),
+            F.count("*").alias("n_frame_matches"),
         )
-        _DEDUP_SILVER[pkey] = pairs
-    return pairs
+        .orderBy("id_a", "id_b")
+        .localCheckpoint(eager=True)
+    )
 
 
 QUERIES["dedup_video_phash"] = dedup_video_phash
@@ -5686,6 +5629,7 @@ def _crossmodal_queries(emb: DataFrame) -> DataFrame:
     )
 
 
+@silver
 def _crossmodal_ivf_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned cross-modal IVF retrieval frame (r15, VERDICT r14 item 6):
     the three crossmodal queries run the IDENTICAL retrieval — ivf_topk
@@ -5698,17 +5642,12 @@ def _crossmodal_ivf_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     hard-negative miner all read one frame. Twin test
     ``tests/test_llmdata.py::test_crossmodal_ivf_silver_matches_fresh_retrieval``
     pins the silver row-for-row to a fresh retrieval."""
-    key = ("crossmodal_ivf", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        from securities_pricing_data_pipeline_spark.llmdata.similarity import ivf_topk
+    from securities_pricing_data_pipeline_spark.llmdata.similarity import ivf_topk
 
-        emb = load(spark, sf_dir, "embeddings")
-        df = ivf_topk(
-            emb, _crossmodal_queries(emb), k=5, n_centroids=16, nprobe=4
-        ).localCheckpoint(eager=True)
-        _DEDUP_SILVER[key] = df
-    return df
+    emb = load(spark, sf_dir, "embeddings")
+    return ivf_topk(
+        emb, _crossmodal_queries(emb), k=5, n_centroids=16, nprobe=4
+    ).localCheckpoint(eager=True)
 
 
 def sim_crossmodal_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5857,6 +5796,7 @@ FROM t, h, p
 """
 
 
+@silver
 def _nsw_edge_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-session NSW edge index over the embeddings — the graph-ANN
     index artifact (``llmdata.similarity.nsw_build_edges``), built once
@@ -5878,16 +5818,11 @@ def _nsw_edge_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
         nsw_build_edges,
     )
 
-    key = ("nsw_edges", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        df = _right_size_silver(
-            nsw_build_edges(load(spark, sf_dir, "embeddings")).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
+    return _right_size_silver(
+        nsw_build_edges(load(spark, sf_dir, "embeddings")).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        _DEDUP_SILVER[key] = df
-    return df
+    )
 
 
 from securities_pricing_data_pipeline_spark.queries.helpers import (  # noqa: E402
@@ -5895,6 +5830,7 @@ from securities_pricing_data_pipeline_spark.queries.helpers import (  # noqa: E4
 )
 
 
+@silver
 def _nsw_cvec_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned (id, vec, nrm) corpus-vector frame the NSW beam rounds
     fetch candidate vectors from — one corpus-sized cache serving every
@@ -5905,21 +5841,16 @@ def _nsw_cvec_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from securities_pricing_data_pipeline_spark.llmdata.similarity import norm_grid
 
-    key = ("nsw_cvec", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        df = (
-            load(spark, sf_dir, "embeddings")
-            .select(
-                F.col("vec_id").alias("id"),
-                F.col("embedding").alias("vec"),
-                norm_grid(F.col("embedding")).alias("nrm"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+    df = (
+        load(spark, sf_dir, "embeddings")
+        .select(
+            F.col("vec_id").alias("id"),
+            F.col("embedding").alias("vec"),
+            norm_grid(F.col("embedding")).alias("nrm"),
         )
-        df = _right_size_silver(df)
-        _DEDUP_SILVER[key] = df
-    return df
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    return _right_size_silver(df)
 
 
 def sim_nsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6290,6 +6221,7 @@ def _ivf_trained_centroids(spark: SparkSession, sf_dir: str, k: int = 16) -> Dat
     )
 
 
+@silver
 def _ivf_trained_cent_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned TRAINED-centroid frame (r14): the Lloyd update is an
     index-BUILD cost, not a serving cost — the same index-artifact
@@ -6297,12 +6229,7 @@ def _ivf_trained_cent_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     silvers, cvec, pinned signature silvers). Both trained-IVF queries
     previously re-ran the posexplode + assignment + mean pipeline and
     re-checkpointed it on EVERY call (~1.5-2 s per trial at sf0.1)."""
-    key = ("ivf_trained_cent", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        df = _ivf_trained_centroids(spark, sf_dir).localCheckpoint(eager=True)
-        _DEDUP_SILVER[key] = df
-    return df
+    return _ivf_trained_centroids(spark, sf_dir).localCheckpoint(eager=True)
 
 
 def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6318,21 +6245,17 @@ def sim_ivf_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_trained_topk10_silver(spark, sf_dir)
 
 
+@silver
 def _ivf_trained_topk10_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned TRAINED-centroid IVF retrieval over the ten audit queries
     (r15): the sim_ivf_trained_topk report and the trained arm of
     sim_ivf_trained_recall run the identical retrieval — one trained
     list build + scan per (session, sf)."""
-    key = ("ivf_trained_topk10", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        emb = load(spark, sf_dir, "embeddings")
-        cent = _ivf_trained_cent_silver(spark, sf_dir)
-        df = ivf_topk(
-            emb, emb.filter(F.col("vec_id") < 10), k=5, nprobe=4, centroids=cent
-        ).localCheckpoint(eager=True)
-        _DEDUP_SILVER[key] = df
-    return df
+    emb = load(spark, sf_dir, "embeddings")
+    cent = _ivf_trained_cent_silver(spark, sf_dir)
+    return ivf_topk(
+        emb, emb.filter(F.col("vec_id") < 10), k=5, nprobe=4, centroids=cent
+    ).localCheckpoint(eager=True)
 
 
 QUERIES["sim_ivf_trained_topk"] = sim_ivf_trained_topk
@@ -7025,6 +6948,7 @@ ORDER BY vec_id
 """
 
 
+@silver
 def _hnsw_top_edge_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned UPPER-LAYER adjacency for HNSW — the same
     ``nsw_build_edges`` kernel over the hash-selected sparse subset
@@ -7040,21 +6964,17 @@ def _hnsw_top_edge_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
         nsw_build_edges,
     )
 
-    key = ("hnsw_top_edges", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        emb = load(spark, sf_dir, "embeddings").filter(
-            portable_hash60(F.col("vec_id").cast("string")) % 8 == 0
+    emb = load(spark, sf_dir, "embeddings").filter(
+        portable_hash60(F.col("vec_id").cast("string")) % 8 == 0
+    )
+    return _right_size_silver(
+        nsw_build_edges(emb, shortcuts=True).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        df = _right_size_silver(
-            nsw_build_edges(emb, shortcuts=True).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-        )
-        _DEDUP_SILVER[key] = df
-    return df
+    )
 
 
+@silver
 def _hnsw_l0_edge_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned LAYER-0 adjacency for HNSW: the shared LSH adjacency
     (``_nsw_edge_silver`` — reused, not rebuilt) unioned with the
@@ -7069,18 +6989,13 @@ def _hnsw_l0_edge_silver(spark: SparkSession, sf_dir: str) -> DataFrame:
         shortcut_edges,
     )
 
-    key = ("hnsw_l0_edges", spark.sparkContext.applicationId, sf_dir)
-    df = _DEDUP_SILVER.get(key)
-    if df is None:
-        df = (
-            _nsw_edge_silver(spark, sf_dir)
-            .unionByName(shortcut_edges(load(spark, sf_dir, "embeddings")))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # materializes now (count inside): search plans must see only the cache
-        df = _right_size_silver(df)
-        _DEDUP_SILVER[key] = df
-    return df
+    df = (
+        _nsw_edge_silver(spark, sf_dir)
+        .unionByName(shortcut_edges(load(spark, sf_dir, "embeddings")))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    # materializes now (count inside): search plans must see only the cache
+    return _right_size_silver(df)
 
 
 def sim_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

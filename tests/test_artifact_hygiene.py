@@ -271,3 +271,23 @@ def test_bench_end_ratio_recorded():
         f"full artifacts with bench.py, which re-probes the canary set "
         f"after the sweep"
     )
+
+
+def test_only_the_silver_helper_keys_on_application_id():
+    """One silver abstraction: per-session caching keys on the Spark
+    ``applicationId`` inside ``queries/helpers.py``'s ``@silver`` and
+    nowhere else in the package. A second module reading it is a
+    hand-rolled session cache; decorate the builder instead."""
+    pkg = os.path.join(ROOT, "securities_pricing_data_pipeline_spark")
+    allowed = os.path.join(pkg, "queries", "helpers.py")
+    hits = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        if path == allowed:
+            continue
+        with open(path, encoding="utf-8") as fh:
+            hits += [
+                f"{os.path.relpath(path, ROOT)}:{n}"
+                for n, line in enumerate(fh, 1)
+                if "applicationId" in line
+            ]
+    assert not hits, f"applicationId outside queries/helpers.py: {hits}"

@@ -1424,15 +1424,13 @@ def test_bm25_and_prf_share_one_postings_silver(spark):
     from securities_pricing_data_pipeline_spark.queries import llmq
 
     sf = "/root/testdata/sf0.001"
-    app = spark.sparkContext.applicationId
-    key = ("postings", app, sf)
-    llmq._DEDUP_SILVER.pop(key, None)
+    llmq._bm25_postings.cache_clear()
     a = llmq._bm25_postings(spark, sf)
     b = llmq._bm25_postings(spark, sf)
     assert a is b  # cache hit
     llmq.text_bm25_topdocs(spark, sf).collect()
     llmq.text_prf_expansion(spark, sf).collect()
-    assert llmq._DEDUP_SILVER.get(key) is a  # both queries reused it
+    assert llmq._bm25_postings(spark, sf) is a  # both queries reused it
 
 
 def test_sq8_topk_matches_python_replay(spark):

@@ -926,22 +926,54 @@ def test_hits_rejects_zero_iters(spark):
         hits(edges, iters=0)
 
 
-def test_session_silver_registry_evicts_stale_sessions():
-    """Inserting a silver for a NEW applicationId drops every entry
-    owned by other (dead) sessions, so the registry never grows across
-    session cycles (VERDICT r9 item 2). Same-session keys survive."""
-    from securities_pricing_data_pipeline_spark.queries.helpers import (
-        SessionSilverRegistry,
-    )
+def test_silver_caches_per_session_and_evicts_stale_sessions(spark, sf_dir, monkeypatch):
+    """``@silver`` keys on (builder, applicationId, sf_dir, params with
+    defaults applied). Storing an entry for a NEW applicationId drops
+    every entry owned by other (dead) sessions, the bars silver's
+    included, so no registry grows across session cycles (VERDICT r9
+    item 2). ``cache_clear()`` drops only its own builder's entries."""
+    import types
 
-    reg = SessionSilverRegistry()
-    reg[("shingles", "app-1", "sfA")] = "df1"
-    reg[("minhash", "app-1", "sfA", 64)] = "df2"
-    assert len(reg) == 2  # same session: both live
-    reg[("shingles", "app-2", "sfA")] = "df3"
-    assert set(reg) == {("shingles", "app-2", "sfA")}  # app-1 evicted
-    reg[("minhash", "app-2", "sfA", 64)] = "df4"
-    assert len(reg) == 2
+    from securities_pricing_data_pipeline_spark.queries import helpers
+    from securities_pricing_data_pipeline_spark.queries.bars import bars_silver
+
+    monkeypatch.setattr(helpers, "_SILVERS", {})
+    builds = []
+
+    @helpers.silver
+    def shingles(spark, sf_dir, n=3):
+        builds.append((spark.sparkContext.applicationId, sf_dir, n))
+        return object()
+
+    @helpers.silver
+    def sigs(spark, sf_dir):
+        return object()
+
+    def session(app):
+        return types.SimpleNamespace(sparkContext=types.SimpleNamespace(applicationId=app))
+
+    def owners():
+        return {k[1] for k in helpers._SILVERS}
+
+    s1 = session("app-1")
+    a = shingles(s1, "sfA")
+    assert shingles(s1, "sfA") is a  # same-session repeat
+    assert shingles(s1, "sfA", 3) is a and shingles(s1, sf_dir="sfA", n=3) is a
+    assert shingles(s1, "sfA", 5) is not a  # different params
+    assert shingles(s1, "sfB") is not a  # different sf_dir
+    assert builds == [("app-1", "sfA", 3), ("app-1", "sfA", 5), ("app-1", "sfB", 3)]
+    assert shingles.__name__ == "shingles"
+
+    bars = bars_silver(spark, sf_dir)
+    assert owners() == {spark.sparkContext.applicationId}  # app-1 evicted
+    s2 = session("app-2")
+    x, y = shingles(s2, "sfA"), sigs(s2, "sfA")
+    assert owners() == {"app-2"}  # the bars silver is evicted too
+
+    shingles.cache_clear()
+    assert sigs(s2, "sfA") is y  # other builders keep their entries
+    assert shingles(s2, "sfA") is not x
+    assert bars_silver(spark, sf_dir) is not bars  # rebuilt after eviction
 
 
 def _install_fake_delta(monkeypatch):

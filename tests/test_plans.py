@@ -71,7 +71,7 @@ def test_flagship_global_rank_after_reduction(spark):
     # earlier serving-query test in the session) swaps the bars subtree
     # for an InMemoryTableScan; the CacheManager matches by logical plan,
     # so the persisted relation must be dropped too
-    bars._SILVER_CACHE.clear()
+    bars.bars_silver.cache_clear()
     spark.catalog.clearCache()
     plan = _plan(flagship(spark, SF))
     # the single-partition exchange (global rank) must consume the
@@ -87,7 +87,9 @@ def test_flagship_global_rank_after_reduction(spark):
     # build's initial+final AQE echo below it doesn't execute per query)
     # must contain exactly ONE exchange — the SinglePartition global rank;
     # the per-symbol aggregate reuses the silver's partitioning.
-    consumer = plan[: plan.index("InMemoryRelation")]
+    cut = plan.find("InMemoryRelation")
+    assert cut != -1, "bars silver no longer cached"
+    consumer = plan[:cut]
     assert len(re.findall(r"Exchange \(\d+\)", consumer)) == 1
 
 
@@ -198,13 +200,15 @@ def test_q12_drawdown_reuses_symbol_partitioning(spark):
     from securities_pricing_data_pipeline_spark.queries import bars
     from securities_pricing_data_pipeline_spark.queries.serving import q12_max_drawdown
 
-    bars._SILVER_CACHE.clear()
+    bars.bars_silver.cache_clear()
     spark.catalog.clearCache()
     plan = _plan(q12_max_drawdown(spark, SF))
     # r15 layout: the running-peak window AND the per-symbol aggregate
     # both reuse the symbol-partitioned cached silver — the consumer side
     # (above the InMemoryRelation) plans ZERO exchanges.
-    consumer = plan[: plan.index("InMemoryRelation")]
+    cut = plan.find("InMemoryRelation")
+    assert cut != -1, "bars silver no longer cached"
+    consumer = plan[:cut]
     assert len(re.findall(r"Exchange \(\d+\)", consumer)) == 0, consumer
 
 
@@ -254,14 +258,16 @@ def test_q15_rsi_single_symbol_shuffle(spark):
     from securities_pricing_data_pipeline_spark.queries import bars
     from securities_pricing_data_pipeline_spark.queries.serving import q15_rsi
 
-    bars._SILVER_CACHE.clear()
+    bars.bars_silver.cache_clear()
     spark.catalog.clearCache()
     plan = _plan(q15_rsi(spark, SF))
     # r15 layout: lag + both rolling sums all ride the symbol-partitioned
     # cached silver — ZERO consumer-side exchanges (the silver build's
     # aggregate + repartition live below the InMemoryRelation, once per
     # session); the symbol hashpartitioning exists in the build lineage.
-    consumer = plan[: plan.index("InMemoryRelation")]
+    cut = plan.find("InMemoryRelation")
+    assert cut != -1, "bars silver no longer cached"
+    consumer = plan[:cut]
     assert len(re.findall(r"Exchange \(\d+\)", consumer)) == 0, consumer
     assert len(re.findall(r"hashpartitioning\(symbol", plan)) >= 1
 
@@ -337,13 +343,15 @@ def test_scd2_windows_share_symbol_shuffle(spark):
     from securities_pricing_data_pipeline_spark.queries import bars
     from securities_pricing_data_pipeline_spark.queries.serving import scd2_price_bands
 
-    bars._SILVER_CACHE.clear()
+    bars.bars_silver.cache_clear()
     spark.catalog.clearCache()
     plan = _plan(scd2_price_bands(spark, SF))
     # r15 layout: BOTH windows ride the symbol-partitioned cached silver —
     # zero consumer-side symbol exchanges (the one consumer exchange left
     # is the final output orderBy's range partitioning).
-    consumer = plan[: plan.index("InMemoryRelation")]
+    cut = plan.find("InMemoryRelation")
+    assert cut != -1, "bars silver no longer cached"
+    consumer = plan[:cut]
     assert len(re.findall(r"hashpartitioning\(symbol#\d+, \d+\)", consumer)) == 0
     assert len(re.findall(r"Exchange \(\d+\)", consumer)) <= 1
 
