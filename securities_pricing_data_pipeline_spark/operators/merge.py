@@ -1,43 +1,41 @@
-"""MERGE-family table maintenance behind a pluggable table-format seam
-(SURVEY §2.4 A5/A6/A7).
+"""MERGE-family table maintenance on plain parquet (SURVEY §2.4 A5/A6/A7).
 
 The reference's unit of work is one trading date, so the upsert
 (``MERGE ... WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT``,
 ``4. merge_core.sql:53-96``, ``7. merge_fact_daily_price.sql:23-52``)
-is reproduced exactly by **dynamic partition overwrite** on plain
-parquet: rewrite the affected ``trade_date`` partitions as
-dedup(source ∪ existing-partition). Untouched partitions are never read
-or written — at 100 TB a daily run touches one partition regardless of
-table size.
+is reproduced exactly by **dynamic partition overwrite**: rewrite the
+affected ``trade_date`` partitions as dedup(source ∪ existing-partition).
+Untouched partitions are never read or written — a daily run touches one
+partition regardless of table size. The rewrite is one Spark action, and
+its reconciliation counts (``MergeCounts``: inserted, updated, written —
+the numbers the reference takes around its MERGE statements) are
+observed on that write.
 
 Insert-only merges (``WHEN NOT MATCHED THEN INSERT`` only — rejects, dims;
-``4.:24-45``, ``5.:22-37``, ``6.:17-37``) are a left-anti join + append:
-first write wins, existing rows never updated.
+``4.:24-45``, ``5.:22-37``, ``6.:17-37``) are a null-safe anti-join plus
+an in-batch dedup, published by a **staged append**: the new rows are
+written once, with an observed count, to a ``_staging-<uuid>`` directory
+under the table (readers skip ``_`` directories), and their part files
+move into the table only when that count is above 0. First write wins;
+existing rows are never updated, and an insert with nothing new leaves
+the table's files untouched.
 
 Note (SURVEY A5): the reference header comments promise a guarded UPDATE,
 but the code's ``WHEN MATCHED`` has no guard — updates are unconditional;
 we implement the code's semantics (source wins over target).
 
-**Why the seam exists (the 100 TB escape hatch).** Partition overwrite
-re-reduces |source ∪ touched-partitions| — exactly right when merges
-align with the partition column (the reference's per-date batches), but
-the wrong cost model when keyed updates scatter across partitions: the
-CDC probe (``SCALE_PROBE.md`` cdc_10m) measured 26.2 s to LWW-merge a
-10 M-row batch over 1 M keys this way, where a transactional keyed
-``MERGE INTO`` (Delta/Iceberg) touches only the files holding matched
-keys. ``DeltaMergeFormat`` below is that backend: real ``MERGE INTO``
-code paths, import-gated (same discipline as
-``plans.notify.webhook_notifier``) because this sandbox ships no Delta;
-deployments with ``delta-spark`` on the classpath get file-pruned keyed
-merges by swapping one constructor — every call site goes through the
-``TableFormat`` interface.
+Observations are read only off the final stage of a write's plan. Under
+AQE, a stage whose output turns out empty is replaced by an empty
+relation, and an ``observe`` inside it is then never reported.
 """
 
 from __future__ import annotations
 
+import uuid
 from collections.abc import Sequence
+from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -52,19 +50,17 @@ def _path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def _merged_frame(
-    source: DataFrame,
-    existing: DataFrame | None,
-    keys: Sequence[str],
-    prefer_source_order: Sequence[Column] | None,
-) -> DataFrame:
-    """dedup(source ∪ existing) with source rows winning on key collision —
-    the shared LWW reduction both file formats use for the union path."""
-    tagged = source.withColumn("__is_src", F.lit(1))
-    if existing is not None:
-        tagged = tagged.unionByName(existing.withColumn("__is_src", F.lit(0)))
-    order = [F.desc("__is_src")] + list(prefer_source_order or [])
-    return dedup_latest(tagged, list(keys), order).drop("__is_src")
+class MergeCounts(NamedTuple):
+    """Reconciliation counts of one upsert, observed on its write.
+
+    With E existing rows in the touched partitions, S distinct source keys
+    and M rows written: ``updated = S + E − M`` (source keys already
+    present) and ``inserted = M − E`` (source keys that were not).
+    ``written`` is M, the touched partitions' full post-merge contents."""
+
+    inserted: int
+    updated: int
+    written: int
 
 
 def lww_reduce(
@@ -84,27 +80,76 @@ def lww_reduce(
     ).select(*keys, *[F.col(f"__s.{c}").alias(c) for c in rest])
 
 
-def _newer_condition(order_cols: Sequence[str]) -> str:
-    """Lexicographic 's is strictly newer than t' over ``order_cols`` —
-    the WHEN MATCHED guard a transactional MERGE needs to be
-    re-delivery-safe (an older or duplicate row must never overwrite)."""
-    clauses = []
-    for i, c in enumerate(order_cols):
-        eqs = " AND ".join(f"s.`{p}` = t.`{p}`" for p in order_cols[:i])
-        gt = f"s.`{c}` > t.`{c}`"
-        clauses.append(f"({eqs} AND {gt})" if eqs else f"({gt})")
-    return " OR ".join(clauses)
+def absent_rows(
+    spark: SparkSession, source: DataFrame, path: str, keys: Sequence[str]
+) -> DataFrame:
+    """The rows of ``source`` whose key the table at ``path`` lacks, one
+    per key, in ``source``'s column order.
+
+    The table's keys are unioned in and sorted first within each key, so
+    one shuffle does both the anti-join and the in-batch dedup. Window
+    partitioning treats NULL keys as equal, so the match is null-safe: a
+    NULL-keyed row is inserted once, not on every run. Among same-key
+    source rows the smallest by the remaining columns wins, whatever the
+    input order or partitioning."""
+    cols = source.columns
+    tagged = source.withColumn("__is_src", F.lit(1))
+    if _path_exists(spark, path):
+        key_schema = T.StructType([source.schema[k] for k in keys])
+        target = spark.read.schema(key_schema).parquet(path)
+        tagged = tagged.unionByName(
+            target.withColumn("__is_src", F.lit(0)), allowMissingColumns=True
+        )
+    order = [F.asc("__is_src")] + [F.asc(c) for c in cols if c not in keys]
+    return (
+        dedup_latest(tagged, list(keys), order)
+        .filter(F.col("__is_src") == 1)
+        .select(*cols)
+    )
+
+
+def append_staged(spark: SparkSession, rows: DataFrame, path: str) -> int:
+    """Append ``rows`` to the unpartitioned table at ``path`` in one Spark
+    action; returns the rows appended.
+
+    ``rows`` are written once, with an ``Observation`` count, to a
+    ``_staging-<uuid>`` directory under the table. Its part files are
+    renamed into the table only when the count is above 0, and the staging
+    directory is always removed. So an empty append leaves the table's
+    files (names, sizes, mtimes) as they were, and an empty append to a
+    missing table leaves no directory behind."""
+    hadoop = spark.sparkContext._jvm.org.apache.hadoop.fs
+    table = hadoop.Path(path)
+    fs = table.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    existed = fs.exists(table)
+    staging = hadoop.Path(table, f"_staging-{uuid.uuid4().hex}")
+    obs = Observation()
+    n = 0
+    try:
+        rows.observe(obs, F.count(F.lit(1)).alias("n")).write.parquet(staging.toString())
+        n = int(obs.get["n"])
+        if n:
+            for st in fs.listStatus(staging):
+                name = st.getPath().getName()
+                if name.startswith("part-") and not fs.rename(
+                    st.getPath(), hadoop.Path(table, name)
+                ):
+                    raise OSError(f"could not move {name} into {path}")
+    finally:
+        fs.delete(staging, True)
+        if not existed and not n:
+            fs.delete(table, True)
+    return n
 
 
 class ParquetPartitionOverwriteFormat:
-    """Default backend: plain parquet + dynamic partition overwrite.
+    """The table format: plain parquet + dynamic partition overwrite.
 
     Correct and file-pruned when the merge unit aligns with the partition
-    column (the reference's one-date-per-run shape); see the module
-    docstring for when to prefer ``DeltaMergeFormat`` instead.
-    """
-
-    name = "parquet"
+    column (the reference's one-date-per-run shape). When keyed updates
+    scatter across partitions, each batch re-reduces |batch ∪
+    touched-partitions| (``SCALE_PROBE.md`` cdc_10m: 26.2 s for 10 M rows
+    over 1 M keys)."""
 
     def exists(self, spark: SparkSession, path: str) -> bool:
         return _path_exists(spark, path)
@@ -129,11 +174,11 @@ class ParquetPartitionOverwriteFormat:
         partition_col: str = "trade_date",
         prefer_source_order: Sequence[Column] | None = None,
         partition_values: Sequence | None = None,
-    ) -> int:
+    ) -> MergeCounts:
         """Rewrite the partitions ``source`` touches as dedup(source ∪
-        their existing rows). Returns the rows written to those
-        partitions, i.e. their full post-merge contents, counted by an
-        ``Observation`` on the write itself (no re-read).
+        their existing rows), source rows winning (``prefer_source_order``
+        breaks ties among same-key source rows). One write; its
+        ``MergeCounts`` are observed on it (no re-read).
 
         ``partition_values`` lists the ``partition_col`` values of
         ``source`` when the caller knows them (the daily pipeline rewrites
@@ -148,7 +193,7 @@ class ParquetPartitionOverwriteFormat:
             partition_values = [
                 r[0] for r in source.select(partition_col).distinct().collect()
             ]
-        existing = None
+        tagged = source.withColumn("__is_src", F.lit(1))
         if exists:
             # the target has the source's columns: reading with its schema
             # skips inference (a column the files lack reads as NULL); the
@@ -156,14 +201,30 @@ class ParquetPartitionOverwriteFormat:
             existing = self.read(spark, path, source.schema).filter(
                 F.col(partition_col).isin(list(partition_values))
             )
-        merged = _merged_frame(source, existing, keys, prefer_source_order)
+            tagged = tagged.unionByName(existing.withColumn("__is_src", F.lit(0)))
+        w = Window.partitionBy(*keys).orderBy(
+            F.desc("__is_src"), *(prefer_source_order or [])
+        )
+        first, src = F.col("__rn") == 1, F.col("__is_src") == 1
         obs = Observation()
-        merged = merged.observe(obs, F.count(F.lit(1)).alias("n"))
+        ranked = tagged.withColumn("__rn", F.row_number().over(w)).observe(
+            obs,
+            F.count_if(first & src).alias("source"),
+            F.count_if(~src).alias("existing"),
+            F.count_if(first).alias("written"),
+        )
         # dynamic partitionOverwriteMode (session.py) → only these partitions move
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+        ranked.filter(first).drop("__rn", "__is_src").write.mode("overwrite").partitionBy(
+            partition_col
+        ).parquet(path)
         if cached:
             source.unpersist()
-        return int(obs.get["n"])
+        c = obs.get
+        return MergeCounts(
+            inserted=c["written"] - c["existing"],
+            updated=c["source"] + c["existing"] - c["written"],
+            written=c["written"],
+        )
 
     def insert_if_absent(
         self,
@@ -172,26 +233,9 @@ class ParquetPartitionOverwriteFormat:
         path: str,
         keys: Sequence[str],
     ) -> int:
-        if self.exists(spark, path):
-            key_schema = T.StructType([source.schema[k] for k in keys])
-            target_keys = self.read(spark, path, key_schema)
-            new_rows = source.join(target_keys, list(keys), "left_anti")
-        else:
-            new_rows = source
-        # dedup within the batch too (first occurrence wins deterministically)
-        new_rows = dedup_latest(new_rows, list(keys), [F.asc(k) for k in keys]).cache()
-        # decide before writing: appending an empty frame still writes an
-        # (empty) part file, so an idempotent re-run must not reach the
-        # write. The probe is one limit-1 job (coalesced, so an empty first
-        # partition cannot make it scale up); the count rides the write.
-        n = 0
-        if not new_rows.coalesce(1).isEmpty():
-            obs = Observation()
-            observed = new_rows.observe(obs, F.count(F.lit(1)).alias("n"))
-            observed.write.mode("append").parquet(path)
-            n = int(obs.get["n"])
-        new_rows.unpersist()
-        return n
+        """Append the rows of ``source`` whose key is not yet in the table
+        (``absent_rows``) in one staged write; returns how many."""
+        return append_staged(spark, absent_rows(spark, source, path, keys), path)
 
     def merge_batch(
         self,
@@ -204,10 +248,8 @@ class ParquetPartitionOverwriteFormat:
         """Streaming-CDC apply unit (the foreachBatch sink body): reduce
         the micro-batch to one winner per key by the ``order_cols`` total
         order, LWW-merge with the current table, republish atomically.
-        Parquet cost model: |batch keys ∪ table keys| rows re-reduced per
-        batch — state lives in the table, not executor memory; the Delta
-        backend turns this into a guarded keyed MERGE INTO touching only
-        matched files (the cdc_10m probe's escape hatch)."""
+        Cost model: |batch keys ∪ table keys| rows re-reduced per batch —
+        state lives in the table, not executor memory."""
         winners = lww_reduce(batch, keys, order_cols)
         if self.exists(spark, path):
             winners = lww_reduce(
@@ -217,162 +259,7 @@ class ParquetPartitionOverwriteFormat:
         winners.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
 
 
-class DeltaMergeFormat:
-    """Transactional keyed ``MERGE INTO`` backend (Delta Lake).
-
-    Import-gated: constructing it without ``delta-spark`` on the
-    classpath raises immediately with an actionable message — the same
-    discipline as ``plans.notify.webhook_notifier``'s ``requests`` gate.
-    Semantics match the parquet backend bit-for-bit on partition-aligned
-    batches (source wins on key collision; insert-only never updates);
-    the difference is purely the cost model — Delta's MERGE prunes to the
-    files containing matched keys, so keyed updates scattered across
-    partitions stop paying the |batch ∪ touched-partitions| re-reduce.
-
-    NOTE: ``prefer_source_order`` has no Delta equivalent (MERGE sees one
-    source row per key), so the batch is pre-reduced with the same
-    ``dedup_latest`` window before the MERGE — identical keep-rule.
-    """
-
-    name = "delta"
-
-    def __init__(self) -> None:
-        try:
-            from delta.tables import DeltaTable  # noqa: F401
-        except ImportError as exc:  # pragma: no cover - exercised via monkeypatch
-            raise ImportError(
-                "DeltaMergeFormat requires the delta-spark package and a "
-                "SparkSession built with configure_spark_with_delta_pip(); "
-                "use ParquetPartitionOverwriteFormat (the default) in "
-                "environments without Delta."
-            ) from exc
-
-    def exists(self, spark: SparkSession, path: str) -> bool:
-        from delta.tables import DeltaTable
-
-        return bool(DeltaTable.isDeltaTable(spark, path))
-
-    def read(
-        self, spark: SparkSession, path: str, schema: T.StructType | None = None
-    ) -> DataFrame:
-        """``schema`` is ignored: the Delta log carries the table schema,
-        so a Delta read runs no inference job either way."""
-        return spark.read.format("delta").load(path)
-
-    def upsert_partitions(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        path: str,
-        keys: Sequence[str],
-        partition_col: str = "trade_date",
-        prefer_source_order: Sequence[Column] | None = None,
-        partition_values: Sequence | None = None,
-    ) -> None:
-        """Keyed MERGE. ``partition_values`` is accepted for interface
-        parity and unused (MERGE prunes by key, not by a partition list).
-        Returns None, not a row count: a MERGE rewrites only the files
-        holding matched keys, so it never observes a partition's full
-        contents, and callers that need one re-count the table."""
-        from delta.tables import DeltaTable
-
-        # one row per key, same keep-rule as the parquet backend
-        batch = dedup_latest(
-            source, list(keys), list(prefer_source_order or [F.asc(k) for k in keys])
-        )
-        if not self.exists(spark, path):
-            batch.write.format("delta").partitionBy(partition_col).save(path)
-            return
-        cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-        (
-            DeltaTable.forPath(spark, path)
-            .alias("t")
-            .merge(batch.alias("s"), cond)
-            .whenMatchedUpdateAll()  # unconditional update: reference semantics
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    def insert_if_absent(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        path: str,
-        keys: Sequence[str],
-    ) -> int:
-        from delta.tables import DeltaTable
-
-        batch = dedup_latest(source, list(keys), [F.asc(k) for k in keys])
-        if not self.exists(spark, path):
-            batch = batch.cache()
-            n = batch.count()
-            if n:
-                batch.write.format("delta").save(path)
-            batch.unpersist()
-            return n
-        cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-        tbl = DeltaTable.forPath(spark, path)
-        (
-            tbl.alias("t")
-            .merge(batch.alias("s"), cond)
-            .whenNotMatchedInsertAll()  # first write wins: no matched clause
-            .execute()
-        )
-        # inserted-row count from the MERGE commit's own operation
-        # metrics — exact for THIS commit even under concurrent writers,
-        # and O(1) vs the O(table) before/after count pair
-        last = tbl.history(1).select("operationMetrics").collect()
-        return int(last[0]["operationMetrics"].get("numTargetRowsInserted", 0))
-
-    def merge_batch(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        path: str,
-        keys: Sequence[str],
-        order_cols: Sequence[str],
-    ) -> None:
-        """Streaming-CDC apply as a transactional keyed MERGE: the batch
-        is pre-reduced to one winner per key (Delta requires it), then
-        MERGE INTO with a GUARDED update — ``whenMatchedUpdateAll`` only
-        when the source row is strictly newer by the ``order_cols``
-        lexicographic order, so replayed or out-of-order micro-batches
-        can never regress a key (the re-delivery safety the parquet
-        backend gets from re-reducing the full union). Touches only the
-        files holding matched keys — the cdc_10m cost-class fix."""
-        from delta.tables import DeltaTable
-
-        winners = lww_reduce(batch, keys, order_cols)
-        if not self.exists(spark, path):
-            winners.write.format("delta").save(path)
-            return
-        cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in keys)
-        (
-            DeltaTable.forPath(spark, path)
-            .alias("t")
-            .merge(winners.alias("s"), cond)
-            .whenMatchedUpdateAll(condition=_newer_condition(order_cols))
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-
-_FORMATS = {
-    ParquetPartitionOverwriteFormat.name: ParquetPartitionOverwriteFormat,
-    DeltaMergeFormat.name: DeltaMergeFormat,
-}
-
 _DEFAULT = ParquetPartitionOverwriteFormat()
-
-
-def get_format(name: str = "parquet"):
-    """Resolve a table-format backend by name (``parquet`` | ``delta``)."""
-    try:
-        return _FORMATS[name]()
-    except KeyError:
-        raise ValueError(
-            f"unknown table format {name!r}; available: {sorted(_FORMATS)}"
-        ) from None
 
 
 def upsert_partitions(
@@ -383,9 +270,8 @@ def upsert_partitions(
     partition_col: str = "trade_date",
     prefer_source_order: Sequence[Column] | None = None,
     partition_values: Sequence | None = None,
-) -> int:
-    """A5 upsert on the default (parquet) backend — see the class for docs.
-    Returns the rows written to the touched partitions."""
+) -> MergeCounts:
+    """A5 upsert — see ``ParquetPartitionOverwriteFormat.upsert_partitions``."""
     return _DEFAULT.upsert_partitions(
         spark, source, path, keys, partition_col, prefer_source_order, partition_values
     )
@@ -397,7 +283,7 @@ def insert_if_absent(
     path: str,
     keys: Sequence[str],
 ) -> int:
-    """A6 insert-only merge on the default (parquet) backend."""
+    """A6 insert-only merge in one staged write; returns the rows inserted."""
     return _DEFAULT.insert_if_absent(spark, source, path, keys)
 
 

@@ -4,7 +4,10 @@ Reference: negative-volume rows are preserved in a reject/audit table with
 ``REJECT_REASON='NEGATIVE_VOLUME'`` (``4. merge_core.sql:24-45``); the
 post-load row-count gate (``2. check_loaded.sql``) is advisory in the
 reference (the operator doesn't fail on FALSE) — here it is a real
-assertion, as SURVEY §2.2 P5 prescribes.
+assertion, as SURVEY §2.2 P5 prescribes. Rows whose symbol is NULL or
+empty are rejected too (``NULL_SYMBOL``): a NULL business key never
+matches an equi-join, so it would reach silver and append a new
+``dim_security`` row on every re-run.
 """
 
 from __future__ import annotations
@@ -13,21 +16,37 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 NEGATIVE_VOLUME = "NEGATIVE_VOLUME"
+NULL_SYMBOL = "NULL_SYMBOL"
+
+
+def eod_reject_reason() -> Column:
+    """Why an EOD row is rejected, or NULL for a valid row: a NULL or
+    empty (normalized) symbol, else a negative volume. A NULL volume is
+    valid, as under the reference's ``VOLUME < 0`` predicate."""
+    return F.when(F.coalesce(F.col("symbol"), F.lit("")) == "", F.lit(NULL_SYMBOL)).when(
+        F.col("volume") < 0, F.lit(NEGATIVE_VOLUME)
+    )
+
+
+def split_by_reason(df: DataFrame, reason: Column) -> tuple[DataFrame, DataFrame]:
+    """Split into (valid, rejects) by a reject-reason expression that is
+    NULL for valid rows; rejects carry it as ``reject_reason``. One source
+    scan feeds both sides."""
+    valid = df.filter(reason.isNull())
+    rejects = df.filter(reason.isNotNull()).withColumn("reject_reason", reason)
+    return valid, rejects
 
 
 def split_rejects(
     df: DataFrame, valid_cond: Column, reason: str
 ) -> tuple[DataFrame, DataFrame]:
-    """Split into (valid, rejects); rejects carry a reject_reason column.
-
-    One source scan feeds both sides; null-safe: rows where the condition
-    is NULL are treated as valid (matching the reference, whose reject
-    predicate ``VOLUME < 0`` is false for NULL volumes).
+    """Split into (valid, rejects) on one condition; rejects carry
+    ``reject_reason``. Null-safe: rows where the condition is NULL are
+    treated as valid (matching the reference, whose reject predicate
+    ``VOLUME < 0`` is false for NULL volumes).
     """
     fails = valid_cond.isNotNull() & ~valid_cond
-    valid = df.filter(~fails)
-    rejects = df.filter(fails).withColumn("reject_reason", F.lit(reason))
-    return valid, rejects
+    return split_by_reason(df, F.when(fails, F.lit(reason)))
 
 
 class EmptyLoadError(AssertionError):

@@ -2,13 +2,14 @@
 
 The reference assembles these as CROSS JOINs of single-row aggregates
 (``3. premerge_metrics.sql:45-53``, ``8. postmerge_metrics.sql:16-25``)
-and ships them over XCom to the Slack summary. Here the premerge metrics
-are one aggregate action (a per-key pass, then one final ``agg``; under
-AQE its two shuffle stages are jobs of their own), and the postmerge
-counts are observed on the upserts' own writes, so they cost no job
-unless a backend reports none. Both come back as a plain dataclass — the
-control-plane scalar is a function return value, not an
-orchestration-framework artifact.
+and ships them over XCom to the Slack summary. Here every count is
+observed on a write the run makes anyway, so no metric launches a Spark
+job of its own: the raw and reject row counts ride the silver write, the
+insert/update split is the silver upsert's ``MergeCounts``, and the
+post-merge CORE/FACT counts are the rows the two upserts wrote to the
+date's partition. ``premerge_metrics`` only reduces those numbers. Both
+come back as a plain dataclass — the control-plane scalar is a function
+return value, not an orchestration-framework artifact.
 """
 
 from __future__ import annotations
@@ -16,16 +17,14 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from securities_pricing_data_pipeline_spark.operators.merge import _table_exists
+from securities_pricing_data_pipeline_spark.operators.merge import MergeCounts, _table_exists
 from securities_pricing_data_pipeline_spark.schemas import (
     EOD_PRICES_SCHEMA,
     FACT_DAILY_PRICE_SCHEMA,
 )
-
-_KEYS = ["symbol", "trade_date"]
 
 
 @dataclass
@@ -41,43 +40,13 @@ class RunMetrics:
 
 
 def premerge_metrics(
-    valid: DataFrame, rejects: DataFrame, silver_existing_keys: DataFrame | None
+    valid_rows: int, reject_rows: int, core: MergeCounts
 ) -> tuple[int, int, int, int]:
-    """(raw, rejects, est_inserts, est_updates) in one aggregate action.
-
-    Valid rows, reject rows and the silver day's keys are tagged and
-    unioned, reduced per (symbol, trade_date) to a row count, a reject
-    count and two flags (has a valid row, is in silver), then summed.
-    est_updates = distinct valid keys already in silver; est_inserts =
-    the remaining distinct valid keys (3.:41-53). Silver keys with a NULL
-    part never count as present, as under the reference's equi-join.
-    """
-    one, zero = F.lit(1), F.lit(0)
-    tagged = valid.select(*_KEYS, one.alias("v"), zero.alias("r"), zero.alias("s"))
-    tagged = tagged.unionByName(
-        rejects.select(*_KEYS, zero.alias("v"), one.alias("r"), zero.alias("s"))
-    )
-    if silver_existing_keys is not None:
-        present = silver_existing_keys.where(
-            F.col("symbol").isNotNull() & F.col("trade_date").isNotNull()
-        )
-        tagged = tagged.unionByName(
-            present.select(*_KEYS, zero.alias("v"), zero.alias("r"), one.alias("s"))
-        )
-    per_key = tagged.groupBy(*_KEYS).agg(
-        F.sum(F.col("v") + F.col("r")).alias("rows"),
-        F.sum("r").alias("rejects"),
-        (F.max("v") == 1).alias("has_valid"),
-        (F.max("s") == 1).alias("in_silver"),
-    )
-    row = per_key.agg(
-        F.sum("rows"),
-        F.sum("rejects"),
-        F.count_if(F.col("has_valid") & ~F.col("in_silver")),
-        F.count_if(F.col("has_valid") & F.col("in_silver")),
-    ).first()
-    raw, reject_cnt, est_inserts, est_updates = (int(x or 0) for x in row)
-    return raw, reject_cnt, est_inserts, est_updates
+    """(raw, rejects, est_inserts, est_updates) from counts observed on
+    the writes (3.:41-53): raw = valid + rejected bronze rows of the day;
+    est_updates = distinct valid keys already in silver (``core.updated``);
+    est_inserts = the remaining distinct valid keys (``core.inserted``)."""
+    return valid_rows + reject_rows, reject_rows, core.inserted, core.updated
 
 
 def postmerge_counts(
@@ -91,7 +60,7 @@ def postmerge_counts(
 
     ``written`` carries the counts the two upserts observed on their own
     writes (the rewritten date partition's rows). Only a count that is
-    None — a backend that reports none — is re-counted with a
+    None — a caller with no observed count — is re-counted with a
     partition-pruned scan.
     """
 

@@ -13,12 +13,20 @@ Stage map (reference task → here):
   t03 upload S3           → write_partitioned to the bronze root (path IS
                             the date layout: trade_date=YYYY-MM-DD/)
   s01 COPY INTO RAW       → sources.csv_source.read_eod_csv → bronze append
-  s02 check loaded        → operators.quality.existence_gate (real assert)
-  s03 premerge metrics    → plans.metrics.premerge_metrics (one aggregate
-                            action over valid ∪ rejects ∪ silver day keys)
-  s04 merge CORE+REJECT   → normalize → split_rejects → dedup_latest →
+  s02 check loaded        → the row count observed on the bronze append;
+                            operators.quality.existence_gate (a real
+                            assert, one isEmpty probe) only when the
+                            append wrote 0 rows
+  s03 premerge metrics    → plans.metrics.premerge_metrics, a pure reducer
+                            of counts observed on the s04 writes: raw and
+                            reject rows on the silver write, inserted vs
+                            updated keys from the upsert's MergeCounts
+  s04 merge CORE+REJECT   → normalize → reject split (NEGATIVE_VOLUME,
+                            NULL_SYMBOL) → dedup_latest →
                             upsert_partitions / insert_if_absent
-  s05 merge DIM_SECURITY  → surrogate_keys.assign_ids + insert_if_absent
+  s05 merge DIM_SECURITY  → one null-safe anti-join of the day's symbols
+                            (merge.absent_rows) → surrogate_keys.assign_ids
+                            → one staged append (merge.append_staged)
   s06 merge DIM_DATE      → date derivations + insert_if_absent
   s07 merge FACT          → broadcast star join + upsert_partitions
   s08 postmerge metrics   → plans.metrics.postmerge_counts, fed the row
@@ -27,9 +35,16 @@ Stage map (reference task → here):
   t05 Slack summary       → plans.notify (pluggable, fires on success AND
                             failure — the reference's trigger_rule=all_done)
 
+Each table write is one Spark action (a new date: 7 in all — the bronze
+append, the silver upsert, the reject insert, ``next_id``, the two dim
+inserts and the fact upsert), and the run's counts are observed on those
+writes.
+
 Idempotency contract (A7): bronze is append-only and may hold duplicates
-(FORCE=TRUE parity); silver/gold writes are per-trade-date idempotent —
-re-running a date leaves every layer byte-identical (tested).
+(FORCE=TRUE parity); silver and fact are rewritten per trade date to the
+same rows; the insert-only tables (rejects, both dims) are left exactly
+as they were — an insert with nothing new moves no file (tested at the
+file level).
 
 Every warehouse read passes its declared schema from ``schemas.py``
 (``Warehouse.read``), so no read runs a schema-inference job and the
@@ -41,7 +56,7 @@ from __future__ import annotations
 import datetime as dt
 import logging
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from securities_pricing_data_pipeline_spark.functions.datetime import (
@@ -55,15 +70,17 @@ from securities_pricing_data_pipeline_spark.functions.datetime import (
 from securities_pricing_data_pipeline_spark.functions.normalize import normalize_symbol
 from securities_pricing_data_pipeline_spark.operators.dedup import dedup_latest
 from securities_pricing_data_pipeline_spark.operators.merge import (
-    _table_exists,
+    MergeCounts,
+    absent_rows,
+    append_staged,
     insert_if_absent,
     upsert_partitions,
 )
 from securities_pricing_data_pipeline_spark.operators.quality import (
-    NEGATIVE_VOLUME,
+    eod_reject_reason,
     existence_gate,
     observe_write_metrics,
-    split_rejects,
+    split_by_reason,
 )
 from securities_pricing_data_pipeline_spark.operators.surrogate_keys import assign_ids, next_id
 from securities_pricing_data_pipeline_spark.plans.metrics import (
@@ -97,30 +114,38 @@ def ingest_bronze(
     spark: SparkSession, wh: Warehouse, landing_path: str, trading_date: dt.date
 ) -> DataFrame:
     """s01: landing CSVs → bronze append (typed, lineage-stamped).
-    Bronze is partitioned by trade_date and append-only."""
+    Bronze is partitioned by trade_date and append-only. s02 reads the
+    row count observed on the append; only an append of 0 rows leaves the
+    gate to probe the day's bronze partition."""
     raw = read_eod_csv(spark, landing_path).filter(F.col("trade_date") == F.lit(trading_date))
-    raw.write.mode("append").partitionBy("trade_date").parquet(wh.bronze)
+    appended = Observation()
+    raw.observe(appended, F.count(F.lit(1)).alias("n")).write.mode("append").partitionBy(
+        "trade_date"
+    ).parquet(wh.bronze)
     loaded = _day(spark, wh, wh.bronze, RAW_EOD_PRICES_SCHEMA, trading_date)
-    existence_gate(loaded, f"bronze load for {trading_date}")  # s02
+    if not appended.get["n"]:
+        existence_gate(loaded, f"bronze load for {trading_date}")  # s02
     return loaded
 
 
 def build_silver(
     spark: SparkSession, wh: Warehouse, trading_date: dt.date
-) -> tuple[tuple[int, int, int, int], int | None]:
+) -> tuple[tuple[int, int, int, int], int]:
     """s03+s04: normalize → reject split → dedup → upsert CORE, insert-only
     REJECT. Returns the premerge metrics (raw, rejects, est_ins, est_upd)
     and the row count the CORE upsert wrote to the date's partition."""
     bronze = _day(spark, wh, wh.bronze, RAW_EOD_PRICES_SCHEMA, trading_date)
     normalized = bronze.withColumn("symbol", normalize_symbol(F.col("symbol")))
-    valid, rejects = split_rejects(normalized, F.col("volume") >= 0, NEGATIVE_VOLUME)
-
-    silver_keys = None
-    if _table_exists(spark, wh.silver):
-        silver_keys = _day(spark, wh, wh.silver, EOD_PRICES_SCHEMA, trading_date).select(
-            "symbol", "trade_date"
-        )
-    pre = premerge_metrics(valid, rejects, silver_keys)
+    reason = eod_reject_reason()
+    # the day's raw and reject row counts ride the silver write
+    read_obs = Observation()
+    counted = normalized.observe(
+        read_obs,
+        F.count(F.lit(1)).alias("raw"),
+        F.count_if(reason.isNotNull()).alias("rejects"),
+    )
+    valid, _ = split_by_reason(counted, reason)
+    _, rejects = split_by_reason(normalized, reason)
 
     # A4 dedup: latest _ingest_ts, tie-break _src_file desc (4.:66-81).
     # The reference's ordering leaves within-file duplicates untotaled
@@ -138,11 +163,10 @@ def build_silver(
     # metrics ride the write job itself (Observation accumulators) —
     # no second scan, unlike the reference's per-metric COUNT statements
     core_rows, write_obs = observe_write_metrics(core_rows, "silver_write")
-    core_written = upsert_partitions(
+    core = upsert_partitions(
         spark, core_rows, wh.silver, keys=["symbol", "trade_date"],
         partition_values=[trading_date],
     )
-    logging.getLogger(__name__).info("silver write metrics: %s", write_obs.get)
 
     # insert-only reject audit (first reject wins, 4.:24-45)
     reject_rows = rejects.select(
@@ -150,31 +174,37 @@ def build_silver(
         "reject_reason", "_src_file", "_ingest_ts",
     )
     insert_if_absent(spark, reject_rows, wh.reject, keys=["symbol", "trade_date"])
-    return pre, core_written
+
+    if core.inserted + core.updated:
+        counts = read_obs.get
+        raw, reject_cnt = counts["raw"], counts["rejects"]
+        logging.getLogger(__name__).info("silver write metrics: %s", write_obs.get)
+    else:
+        # No valid row: AQE replaced the write's empty stages, and the two
+        # observations inside them, with an empty relation, so neither is
+        # reported. Every bronze row of the day is then a reject.
+        raw = reject_cnt = bronze.count()
+    return premerge_metrics(raw - reject_cnt, reject_cnt, core), core.written
 
 
 def build_dim_security(spark: SparkSession, wh: Warehouse, trading_date: dt.date) -> int:
-    """s05: append-only security dim with deterministic surrogate ids."""
-    day_symbols = (
-        _day(spark, wh, wh.silver, EOD_PRICES_SCHEMA, trading_date)
-        .select("symbol")
-        .distinct()
-    )
-    if _table_exists(spark, wh.dim_security):
-        existing = wh.read(spark, wh.dim_security, DIM_SECURITY_SCHEMA).select("symbol")
-        new_symbols = day_symbols.join(existing, "symbol", "left_anti")
-    else:
-        new_symbols = day_symbols
+    """s05: append-only security dim with deterministic surrogate ids. The
+    day's symbols are anti-joined with the dim once, numbered from the
+    high-water mark and published in one staged append."""
+    day_symbols = _day(spark, wh, wh.silver, EOD_PRICES_SCHEMA, trading_date).select("symbol")
+    new_symbols = absent_rows(spark, day_symbols, wh.dim_security, ["symbol"])
     start = next_id(spark, wh.dim_security)
-    new_dim = assign_ids(new_symbols, start)
-    return insert_if_absent(spark, new_dim, wh.dim_security, keys=["symbol"])
+    return append_staged(spark, assign_ids(new_symbols, start), wh.dim_security)
 
 
 def build_dim_date(spark: SparkSession, wh: Warehouse, trading_date: dt.date) -> int:
     """s06: append-only date dim with the §2.5/§2.7 derivations."""
     d = F.col("cal_date")
+    # one JVM-side row: createDataFrame from a Python list would scan a
+    # parallelized RDD of defaultParallelism partitions instead
     row = (
-        spark.createDataFrame([(trading_date,)], "cal_date date")
+        spark.range(1, numPartitions=1)
+        .select(F.lit(trading_date).alias("cal_date"))
         .select(
             date_sk(d).alias("date_sk"),
             d.alias("cal_date"),
@@ -192,9 +222,9 @@ def build_dim_date(spark: SparkSession, wh: Warehouse, trading_date: dt.date) ->
     return insert_if_absent(spark, row, wh.dim_date, keys=["date_sk"])
 
 
-def build_fact(spark: SparkSession, wh: Warehouse, trading_date: dt.date) -> int | None:
+def build_fact(spark: SparkSession, wh: Warehouse, trading_date: dt.date) -> MergeCounts:
     """s07: star join CORE←dims (broadcast dims) → per-date fact upsert.
-    Returns the row count the upsert wrote to the date's partition."""
+    Returns the upsert's counts, observed on its write."""
     core = _day(spark, wh, wh.silver, EOD_PRICES_SCHEMA, trading_date)
     dim_sec = wh.read(spark, wh.dim_security, DIM_SECURITY_SCHEMA)
     fact = (
@@ -229,10 +259,10 @@ def run(
         m.raw_cnt, m.reject_cnt, m.est_inserts, m.est_updates = pre
         build_dim_security(spark, wh, trading_date)
         build_dim_date(spark, wh, trading_date)
-        fact_written = build_fact(spark, wh, trading_date)
+        fact = build_fact(spark, wh, trading_date)
         m.core_cnt, m.fact_cnt = postmerge_counts(
             spark, wh.silver, wh.fact_daily_price, trading_date,
-            written=(core_written, fact_written),
+            written=(core_written, fact.written),
         )
     except Exception as exc:
         m.notes.append(f"FAILED: {type(exc).__name__}: {exc}")

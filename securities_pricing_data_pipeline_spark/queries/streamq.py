@@ -432,15 +432,13 @@ def stream_events_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev.repartition(8, "user_id").write.mode("overwrite").parquet(feed_dir)
 
-    # the apply unit is TableFormat.merge_batch — one winner per user by
-    # the (ts, event_id) total order, re-reduced against the table
-    # (parquet backend) or applied as a guarded keyed MERGE INTO (Delta
-    # backend, same call, swap get_format("delta")). Unifying the
-    # streaming sink with the batch A5/A6 seam means a transactional
-    # format upgrades BOTH paths with one constructor (VERDICT r9 §8).
-    from securities_pricing_data_pipeline_spark.operators.merge import get_format
+    # the apply unit is the table format's merge_batch — one winner per
+    # user by the (ts, event_id) total order, re-reduced against the table
+    from securities_pricing_data_pipeline_spark.operators.merge import (
+        ParquetPartitionOverwriteFormat,
+    )
 
-    fmt = get_format("parquet")
+    fmt = ParquetPartitionOverwriteFormat()
 
     def merge(batch: DataFrame, batch_id: int) -> None:
         fmt.merge_batch(

@@ -19,10 +19,13 @@ from pyspark.sql.streaming import StreamingQuery
 
 from securities_pricing_data_pipeline_spark.functions.normalize import normalize_symbol
 from securities_pricing_data_pipeline_spark.operators.dedup import dedup_latest
-from securities_pricing_data_pipeline_spark.operators.merge import upsert_partitions
+from securities_pricing_data_pipeline_spark.operators.merge import (
+    insert_if_absent,
+    upsert_partitions,
+)
 from securities_pricing_data_pipeline_spark.operators.quality import (
-    NEGATIVE_VOLUME,
-    split_rejects,
+    eod_reject_reason,
+    split_by_reason,
 )
 from securities_pricing_data_pipeline_spark.schemas import EOD_CSV_SCHEMA
 from securities_pricing_data_pipeline_spark.tables import Warehouse
@@ -32,7 +35,7 @@ def _merge_batch(spark: SparkSession, wh: Warehouse, batch: DataFrame) -> None:
     """The per-micro-batch silver merge — same semantics as
     plans.pipeline.build_silver, applied to whatever dates the batch holds."""
     normalized = batch.withColumn("symbol", normalize_symbol(F.col("symbol")))
-    valid, rejects = split_rejects(normalized, F.col("volume") >= 0, NEGATIVE_VOLUME)
+    valid, rejects = split_by_reason(normalized, eod_reject_reason())
     deduped = dedup_latest(
         valid,
         ["symbol", "trade_date"],
@@ -47,10 +50,7 @@ def _merge_batch(spark: SparkSession, wh: Warehouse, batch: DataFrame) -> None:
         "trade_date", "symbol", "open", "high", "low", "close", "volume",
         "reject_reason", "_src_file", "_ingest_ts",
     )
-    if reject_rows.limit(1).count():
-        from securities_pricing_data_pipeline_spark.operators.merge import insert_if_absent
-
-        insert_if_absent(spark, reject_rows, wh.reject, keys=["symbol", "trade_date"])
+    insert_if_absent(spark, reject_rows, wh.reject, keys=["symbol", "trade_date"])
 
 
 def stream_ingest_eod(

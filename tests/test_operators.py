@@ -3,8 +3,11 @@
 from __future__ import annotations
 
 import datetime as dt
+import inspect
 import os
+import re
 import sys
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -12,6 +15,8 @@ sys.path.insert(0, "/root/repo")
 
 from securities_pricing_data_pipeline_spark.operators.dedup import dedup_latest  # noqa: E402
 from securities_pricing_data_pipeline_spark.operators.merge import (  # noqa: E402
+    MergeCounts,
+    absent_rows,
     insert_if_absent,
     upsert_partitions,
 )
@@ -58,9 +63,11 @@ def test_upsert_partitions(spark, tmp_path):
 
 
 def test_upsert_partitions_counts_and_known_partitions(spark, tmp_path):
-    """The returned count is the touched partitions' post-merge rows (read
-    off the write), and passing the partition values the caller already
-    knows gives the same table as collecting them."""
+    """The returned MergeCounts are read off the write: ``written`` is the
+    touched partitions' post-merge rows, ``inserted`` and ``updated`` the
+    source keys that were absent and present. Passing the partition values
+    the caller already knows gives the same table and counts as collecting
+    them."""
     d1, d2 = dt.date(2026, 1, 1), dt.date(2026, 1, 2)
     schema = "symbol string, trade_date date, v double"
     base = spark.createDataFrame([("A", d1, 1.0), ("B", d1, 2.0), ("A", d2, 3.0)], schema)
@@ -69,8 +76,10 @@ def test_upsert_partitions_counts_and_known_partitions(spark, tmp_path):
     tables = []
     for name, vals in (("collected", None), ("known", [d1])):
         path = str(tmp_path / name)
-        assert upsert_partitions(spark, base, path, keys=keys) == 3
-        assert upsert_partitions(spark, src, path, keys=keys, partition_values=vals) == 3
+        first = upsert_partitions(spark, base, path, keys=keys)
+        assert (first.inserted, first.updated, first.written) == (3, 0, 3)
+        second = upsert_partitions(spark, src, path, keys=keys, partition_values=vals)
+        assert (second.inserted, second.updated, second.written) == (1, 1, 3)
         tables.append({tuple(r) for r in spark.read.parquet(path).select("symbol", "trade_date", "v").collect()})
     assert tables[0] == tables[1] == {("A", d1, 10.0), ("B", d1, 2.0), ("C", d1, 5.0), ("A", d2, 3.0)}
 
@@ -88,14 +97,126 @@ def test_insert_if_absent(spark, tmp_path):
     assert sorted(os.listdir(path)) == files  # nothing new: no empty part file
 
 
-def test_table_format_seam_parquet_backend(spark, tmp_path):
-    """get_format('parquet') drives the same LWW upsert as the module
-    functions — the seam call sites can swap backends without behavior
-    change on the default."""
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs launched by ``fn()``, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_insert_if_absent_is_one_action(spark, tmp_path):
+    """One call launches exactly the jobs of one write of its new rows —
+    no cache build, emptiness probe or count — whether it inserts rows
+    or none."""
     from securities_pricing_data_pipeline_spark.operators import merge as m
 
-    fmt = m.get_format("parquet")
-    assert isinstance(fmt, m.ParquetPartitionOverwriteFormat)
+    path = str(tmp_path / "dim")
+    insert_if_absent(spark, spark.createDataFrame([(1, "X")], "id long, name string"), path, ["id"])
+    b = spark.createDataFrame([(1, "CHANGED"), (2, "Y")], "id long, name string")
+    for expected in (1, 0):
+        scratch = str(tmp_path / f"one_write_{expected}")
+        one_write = _jobs_of(spark, lambda: absent_rows(spark, b, path, ["id"]).write.parquet(scratch))
+        got = []
+        jobs = _jobs_of(spark, lambda: got.append(insert_if_absent(spark, b, path, ["id"])))
+        assert got == [expected]
+        assert jobs == one_write
+    code = "".join(
+        inspect.getsource(f)
+        for f in (m.insert_if_absent, m.ParquetPartitionOverwriteFormat.insert_if_absent,
+                  m.absent_rows, m.append_staged)
+    )
+    assert not re.search(r"\.cache\(|isEmpty|\.count\(\)", code)
+
+
+def test_insert_if_absent_empty_leaves_files_alone(spark, tmp_path):
+    """An empty insert into a missing table creates nothing; one into an
+    existing table leaves its files (names, sizes, mtimes) as they were,
+    with no staging directory left behind."""
+    missing = tmp_path / "missing"
+    empty = spark.createDataFrame([], "id long, name string")
+    assert insert_if_absent(spark, empty, str(missing), keys=["id"]) == 0
+    assert not missing.exists()
+
+    path = str(tmp_path / "dim")
+    rows = spark.createDataFrame([(1, "X")], "id long, name string")
+    assert insert_if_absent(spark, rows, path, keys=["id"]) == 1
+
+    def snapshot():
+        return {
+            os.path.relpath(os.path.join(base, n), path): (
+                os.stat(os.path.join(base, n)).st_size,
+                os.stat(os.path.join(base, n)).st_mtime_ns,
+            )
+            for base, _, names in os.walk(path)
+            for n in names
+        }
+
+    before = snapshot()
+    assert insert_if_absent(spark, rows, path, keys=["id"]) == 0
+    assert insert_if_absent(spark, empty, path, keys=["id"]) == 0
+    assert snapshot() == before
+    assert not [d for d in os.listdir(path) if d.startswith("_staging")]
+
+
+def test_leftover_staging_dir_is_invisible_to_reads(spark, tmp_path):
+    """A staged write that died before clean-up leaves a ``_staging-*``
+    directory inside the table; ``Warehouse.read`` must not see its rows."""
+    from securities_pricing_data_pipeline_spark.schemas import DIM_SECURITY_SCHEMA
+    from securities_pricing_data_pipeline_spark.tables import Warehouse
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    schema = "security_id long, symbol string"
+    insert_if_absent(spark, spark.createDataFrame([(1, "A")], schema), wh.dim_security, ["symbol"])
+    stray = os.path.join(wh.dim_security, f"_staging-{uuid.uuid4().hex}")
+    spark.createDataFrame([(2, "B")], schema).write.parquet(stray)
+    got = {tuple(r) for r in wh.read(spark, wh.dim_security, DIM_SECURITY_SCHEMA).collect()}
+    assert got == {(1, "A")}
+
+
+def test_insert_if_absent_is_deterministic_and_keeps_column_order(spark, tmp_path):
+    """Two same-key rows, fed in either order at 1 or 4 partitions, always
+    insert the same winner; every part file keeps the declared column
+    order even when the key is not the first column; NULL keys match
+    null-safely."""
+    schema = "id long, name string, v double"
+    rows = [(1, "B", 2.0), (1, "A", 9.0)]
+    winners = set()
+    for i, ordered in enumerate((rows, rows[::-1])):
+        for parts in (1, 4):
+            path = str(tmp_path / f"order{i}_parts{parts}")
+            src = spark.createDataFrame(ordered, schema).repartition(parts)
+            assert insert_if_absent(spark, src, path, keys=["id"]) == 1
+            winners.add(tuple(spark.read.parquet(path).first()))
+    assert winners == {(1, "A", 9.0)}
+
+    path = str(tmp_path / "dim")
+    dim = "security_id long, symbol string"
+    insert_if_absent(spark, spark.createDataFrame([(1, "A")], dim), path, keys=["symbol"])
+    insert_if_absent(spark, spark.createDataFrame([(2, "B")], dim), path, keys=["symbol"])
+    parts = [f for f in os.listdir(path) if f.startswith("part-")]
+    assert len(parts) == 2
+    for f in parts:
+        assert spark.read.parquet(os.path.join(path, f)).columns == ["security_id", "symbol"]
+
+    keyed = str(tmp_path / "null_keys")
+    src = spark.createDataFrame([(None, "x"), (None, "y"), ("A", "z")], "k string, v string")
+    assert insert_if_absent(spark, src, keyed, keys=["k"]) == 2
+    assert insert_if_absent(spark, src, keyed, keys=["k"]) == 0
+    assert {tuple(r) for r in spark.read.parquet(keyed).collect()} == {(None, "x"), ("A", "z")}
+
+
+def test_table_format_seam_parquet_backend(spark, tmp_path):
+    """The parquet format object drives the same LWW upsert and
+    insert-only merge as the module functions."""
+    from securities_pricing_data_pipeline_spark.operators import merge as m
+
+    fmt = m.ParquetPartitionOverwriteFormat()
     path = str(tmp_path / "seam")
     d1 = dt.date(2026, 1, 1)
     base = spark.createDataFrame(
@@ -116,27 +237,6 @@ def test_table_format_seam_parquet_backend(spark, tmp_path):
         str(tmp_path / "seam_dim"),
         keys=["symbol"],
     ) == 2
-
-    import pytest
-
-    with pytest.raises(ValueError, match="unknown table format"):
-        m.get_format("iceberg")
-
-
-def test_delta_format_import_gated():
-    """No delta-spark in this sandbox: the Delta backend must fail at
-    CONSTRUCTION with the actionable message, not later mid-merge."""
-    import pytest
-
-    from securities_pricing_data_pipeline_spark.operators import merge as m
-
-    try:
-        import delta.tables  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="delta-spark"):
-            m.DeltaMergeFormat()
-    else:  # pragma: no cover - sandbox has no delta; keep the test honest if added
-        assert m.get_format("delta").name == "delta"
 
 
 def test_split_rejects_null_safe(spark):
@@ -976,230 +1076,45 @@ def test_silver_caches_per_session_and_evicts_stale_sessions(spark, sf_dir, monk
     assert bars_silver(spark, sf_dir) is not bars  # rebuilt after eviction
 
 
-def _install_fake_delta(monkeypatch):
-    """Inject a minimal fake ``delta.tables`` module (VERDICT r9 item 5):
-    records merge conditions and whenMatched/whenNotMatched clause calls,
-    and EXECUTES the recorded merge with plain DataFrame ops so contents
-    and the history-metrics inserted-count can be asserted against the
-    parquet backend on the same fixture. Tables live in a dict — the
-    initial ``format('delta')`` writer path can't run without the real
-    package, so tests pre-seed the table and exercise the MERGE path
-    (the logic under test)."""
-    import re
-    import types
-
-    calls = []
-
-    class FakeMergeBuilder:
-        def __init__(self, tbl, source, cond):
-            self.tbl, self.source, self.cond = tbl, source, cond
-            self.matched_update_all = False
-            self.not_matched_insert_all = False
-
-        def whenMatchedUpdateAll(self, condition=None):
-            self.matched_update_all = True
-            self.matched_condition = condition
-            return self
-
-        def whenNotMatchedInsertAll(self):
-            self.not_matched_insert_all = True
-            return self
-
-        def execute(self):
-            # a mini MERGE engine: evaluates the RECORDED condition
-            # strings with Spark itself (t./s. aliases resolve on the
-            # joined frame), so a wrong condition produces wrong rows —
-            # not just a failed string compare
-            from pyspark.sql import functions as SF
-
-            keys = re.findall(r"t\.`([^`]+)` = s\.`\1`", self.cond)
-            assert keys, f"unparseable merge condition: {self.cond}"
-            target = FakeDeltaTable.tables[self.tbl.path]
-            cols = target.columns
-            inserted = self.source.join(target, keys, "left_anti")
-            n_ins = inserted.count()
-            untouched = target.join(self.source, keys, "left_anti")
-            matched = target.alias("t").join(
-                self.source.alias("s"), SF.expr(self.cond)
-            )
-            if self.matched_update_all:
-                guard = (
-                    SF.expr(self.matched_condition)
-                    if getattr(self, "matched_condition", None)
-                    else SF.lit(True)
-                )
-                upd = matched.filter(guard).select(
-                    *[SF.col(f"s.`{c}`").alias(c) for c in cols]
-                )
-                kept = matched.filter(~guard).select(
-                    *[SF.col(f"t.`{c}`").alias(c) for c in cols]
-                )
-            else:
-                upd = matched.limit(0).select(
-                    *[SF.col(f"t.`{c}`").alias(c) for c in cols]
-                )
-                kept = matched.select(*[SF.col(f"t.`{c}`").alias(c) for c in cols])
-            result = (
-                untouched.select(cols)
-                .unionByName(upd)
-                .unionByName(kept)
-                .unionByName(inserted.select(cols))
-            )
-            FakeDeltaTable.tables[self.tbl.path] = result.localCheckpoint()
-            self.tbl.last_metrics = {"numTargetRowsInserted": str(n_ins)}
-            calls.append(self)
-
-    class FakeDeltaTable:
-        tables = {}
-
-        def __init__(self, spark, path):
-            self.spark, self.path = spark, path
-            self.last_metrics = {}
-
-        @classmethod
-        def isDeltaTable(cls, spark, path):
-            return path in cls.tables
-
-        @classmethod
-        def forPath(cls, spark, path):
-            return cls(spark, path)
-
-        def alias(self, name):
-            return self
-
-        def merge(self, source, cond):
-            return FakeMergeBuilder(self, source, cond)
-
-        def history(self, n):
-            return self.spark.createDataFrame(
-                [(self.last_metrics,)], "operationMetrics map<string,string>"
-            )
-
-    fake_tables = types.ModuleType("delta.tables")
-    fake_tables.DeltaTable = FakeDeltaTable
-    fake_delta = types.ModuleType("delta")
-    fake_delta.tables = fake_tables
-    monkeypatch.setitem(sys.modules, "delta", fake_delta)
-    monkeypatch.setitem(sys.modules, "delta.tables", fake_tables)
-    return FakeDeltaTable, calls
-
-
-def test_delta_backend_contract_upsert(spark, tmp_path, monkeypatch):
-    """DeltaMergeFormat.upsert_partitions under the fake module: the
-    merge condition names exactly the keys, both clauses fire, the
-    in-batch duplicate is pre-reduced before the MERGE (one source row
-    per key — Delta requires it), and the final contents are identical
-    to the parquet backend on the same fixture."""
-    from securities_pricing_data_pipeline_spark.operators import merge as m
-
-    FakeDeltaTable, calls = _install_fake_delta(monkeypatch)
+def test_upsert_prefer_source_order_breaks_source_ties(spark, tmp_path):
+    """An in-batch duplicate key keeps the row ``prefer_source_order``
+    ranks first, existing rows lose to any source row, an untouched
+    partition stays, and the counts see one source key per duplicate."""
     d1, d2 = dt.date(2026, 1, 1), dt.date(2026, 1, 2)
     schema = "symbol string, trade_date date, v double"
-    base = spark.createDataFrame(
-        [("A", d1, 1.0), ("B", d1, 2.0), ("A", d2, 3.0)], schema
-    )
-    # in-batch dup for A@d1: desc-v keep-rule must keep 10.0 pre-merge
-    src = spark.createDataFrame(
-        [("A", d1, 10.0), ("A", d1, 4.0), ("C", d1, 5.0)], schema
-    )
+    base = spark.createDataFrame([("A", d1, 1.0), ("B", d1, 2.0), ("A", d2, 3.0)], schema)
+    src = spark.createDataFrame([("A", d1, 4.0), ("A", d1, 10.0), ("C", d1, 5.0)], schema)
     keys = ["symbol", "trade_date"]
-    order = [F.desc("v")]
+    path = str(tmp_path / "t")
+    upsert_partitions(spark, base, path, keys=keys)
+    counts = upsert_partitions(spark, src, path, keys=keys, prefer_source_order=[F.desc("v")])
+    assert counts == MergeCounts(inserted=1, updated=1, written=3)
+    got = {tuple(r) for r in spark.read.parquet(path).select("symbol", "trade_date", "v").collect()}
+    assert got == {("A", d1, 10.0), ("B", d1, 2.0), ("C", d1, 5.0), ("A", d2, 3.0)}
 
-    fmt = m.DeltaMergeFormat()
-    FakeDeltaTable.tables["/fake/prices"] = base
-    fmt.upsert_partitions(
-        spark, src, "/fake/prices", keys=keys, prefer_source_order=order
+
+def test_merge_batch_replayed_out_of_order(spark, tmp_path):
+    """Streaming-CDC apply: the second micro-batch is replayed out of
+    order (an older ts for user A, a newer one for B, a new user C). The
+    (ts, event_id) LWW re-reduce must not let the stale A row regress
+    the table."""
+    from securities_pricing_data_pipeline_spark.operators.merge import (
+        ParquetPartitionOverwriteFormat,
     )
 
-    (call,) = calls
-    assert call.cond == "t.`symbol` = s.`symbol` AND t.`trade_date` = s.`trade_date`"
-    assert call.matched_update_all and call.not_matched_insert_all
-    per_key = call.source.groupBy(*keys).count().agg(F.max("count")).first()[0]
-    assert per_key == 1  # pre-reduced: Delta MERGE sees one row per key
-
-    # parquet backend, same fixture: seed then upsert
-    path = str(tmp_path / "pq")
-    m.upsert_partitions(spark, base, path, keys=keys)
-    m.upsert_partitions(spark, src, path, keys=keys, prefer_source_order=order)
-    cols = ["symbol", "trade_date", "v"]  # partitionBy reorders on read
-    pq = {tuple(r) for r in spark.read.parquet(path).select(cols).collect()}
-    dl = {
-        tuple(r) for r in FakeDeltaTable.tables["/fake/prices"].select(cols).collect()
-    }
-    assert dl == pq == {("A", d1, 10.0), ("B", d1, 2.0), ("C", d1, 5.0), ("A", d2, 3.0)}
-
-
-def test_delta_backend_contract_insert_if_absent(spark, tmp_path, monkeypatch):
-    """insert_if_absent under the fake module: insert-only (NO matched
-    clause), appended count comes from the commit's operationMetrics
-    (ADVICE r9 #2 — no before/after table scans), first-write-wins
-    contents match the parquet backend."""
-    from securities_pricing_data_pipeline_spark.operators import merge as m
-
-    FakeDeltaTable, calls = _install_fake_delta(monkeypatch)
-    a = spark.createDataFrame([(1, "X")], "id long, name string")
-    b = spark.createDataFrame([(1, "CHANGED"), (2, "Y")], "id long, name string")
-
-    fmt = m.DeltaMergeFormat()
-    FakeDeltaTable.tables["/fake/dim"] = a
-    assert fmt.insert_if_absent(spark, b, "/fake/dim", keys=["id"]) == 1
-
-    (call,) = calls
-    assert call.cond == "t.`id` = s.`id`"
-    assert call.not_matched_insert_all and not call.matched_update_all
-
-    path = str(tmp_path / "dim_pq")
-    m.insert_if_absent(spark, a, path, keys=["id"])
-    m.insert_if_absent(spark, b, path, keys=["id"])
-    pq = {(r.id, r.name) for r in spark.read.parquet(path).collect()}
-    dl = {(r.id, r.name) for r in FakeDeltaTable.tables["/fake/dim"].collect()}
-    assert dl == pq == {(1, "X"), (2, "Y")}
-
-
-def test_delta_backend_contract_merge_batch(spark, tmp_path, monkeypatch):
-    """Streaming-CDC apply through the seam: two micro-batches, the
-    second REPLAYED OUT OF ORDER (older ts for user A, newer for B, new
-    user C). The Delta backend must issue a GUARDED update — condition
-    's strictly newer by (ts, event_id)' — so the stale A row cannot
-    regress the table; final contents must equal the parquet backend's
-    full LWW re-reduce on the same batches. The fake executes the
-    recorded condition with Spark, so a wrong guard yields wrong rows."""
-    from securities_pricing_data_pipeline_spark.operators import merge as m
-
-    FakeDeltaTable, calls = _install_fake_delta(monkeypatch)
     schema = "user_id string, ts long, event_id long, event_type string, value double"
     b1 = spark.createDataFrame(
-        [("A", 10, 1, "x", 1.0), ("A", 12, 2, "y", 2.0), ("B", 5, 3, "x", 3.0)],
-        schema,
+        [("A", 10, 1, "x", 1.0), ("A", 12, 2, "y", 2.0), ("B", 5, 3, "x", 3.0)], schema
     )
     b2 = spark.createDataFrame(
-        [("A", 8, 4, "z", 9.0), ("B", 7, 5, "w", 4.0), ("C", 1, 6, "x", 5.0)],
-        schema,
+        [("A", 8, 4, "z", 9.0), ("B", 7, 5, "w", 4.0), ("C", 1, 6, "x", 5.0)], schema
     )
-    keys, order = ["user_id"], ["ts", "event_id"]
-
-    pq_path = str(tmp_path / "cdc_pq")
-    pq = m.get_format("parquet")
+    path = str(tmp_path / "cdc")
+    fmt = ParquetPartitionOverwriteFormat()
     for b in (b1, b2):
-        pq.merge_batch(spark, b, pq_path, keys=keys, order_cols=order)
-
-    dl = m.DeltaMergeFormat()
-    FakeDeltaTable.tables["/fake/cdc"] = m.lww_reduce(b1, keys, order)
-    dl.merge_batch(spark, b2, "/fake/cdc", keys=keys, order_cols=order)
-
-    (call,) = calls
-    assert call.cond == "t.`user_id` = s.`user_id`"
-    assert call.matched_condition == (
-        "(s.`ts` > t.`ts`) OR (s.`ts` = t.`ts` AND s.`event_id` > t.`event_id`)"
-    )
-    assert call.not_matched_insert_all
-    per_key = call.source.groupBy(*keys).count().agg(F.max("count")).first()[0]
-    assert per_key == 1  # pre-reduced batch
-
-    want = {("A", 12, 2, "y", 2.0), ("B", 7, 5, "w", 4.0), ("C", 1, 6, "x", 5.0)}
-    got_pq = {tuple(r) for r in spark.read.parquet(pq_path).collect()}
-    got_dl = {tuple(r) for r in FakeDeltaTable.tables["/fake/cdc"].collect()}
-    assert got_pq == got_dl == want
+        fmt.merge_batch(spark, b, path, keys=["user_id"], order_cols=["ts", "event_id"])
+    got = {tuple(r) for r in spark.read.parquet(path).collect()}
+    assert got == {("A", 12, 2, "y", 2.0), ("B", 7, 5, "w", 4.0), ("C", 1, 6, "x", 5.0)}
 
 
 def test_landmark_bfs_hand_checked(spark):

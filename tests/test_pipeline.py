@@ -15,9 +15,12 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
+from securities_pricing_data_pipeline_spark.operators.dedup import dedup_latest  # noqa: E402
+from securities_pricing_data_pipeline_spark.operators.merge import upsert_partitions  # noqa: E402
 from securities_pricing_data_pipeline_spark.operators.quality import (  # noqa: E402
-    NEGATIVE_VOLUME,
-    split_rejects,
+    NULL_SYMBOL,
+    eod_reject_reason,
+    split_by_reason,
 )
 from securities_pricing_data_pipeline_spark.plans.metrics import (  # noqa: E402
     postmerge_counts,
@@ -40,7 +43,7 @@ D2 = dt.date(2026, 1, 6)
 D3 = dt.date(2026, 1, 7)
 
 #: Spark jobs one run() of a new date may launch (test_run_job_budget)
-JOB_BUDGET = 27
+JOB_BUDGET = 16
 
 
 @pytest.fixture(scope="module")
@@ -172,8 +175,10 @@ def test_run_job_budget(pipeline_run, tmp_path):
     schema-inference read, a count action, an AQE stage) costs scheduling
     and planning time whatever the data size. This run took 62 jobs
     before declared-schema reads, the one-action premerge metrics,
-    write-observed counts and one-job emptiness probes; it takes 27 with
-    them (the same at 1, 4 and 8 cores)."""
+    write-observed counts and one-job emptiness probes; it took 27 with
+    them (the same at 1, 4 and 8 cores). It takes 16 now that every table
+    write is one action (7 in all) whose counts are observed on the write:
+    no cache, emptiness probe, count or separate premerge aggregate."""
     spark, wh, *_ = pipeline_run
     wh3 = _clone_warehouse(wh, tmp_path)
     landing = str(tmp_path / "landing")
@@ -243,11 +248,26 @@ def _premerge_four_counts(valid, rejects, silver_keys):
     return raw_cnt_valid + reject_cnt, reject_cnt, total_keys - existing, existing
 
 
-def test_premerge_one_pass_matches_four_counts(spark):
-    """premerge_metrics (one aggregate action) equals the four-count
-    definition on a restatement: duplicate keys, a reject-only key, a key
-    with both a valid and a rejected row, a NULL volume (valid) and a
-    NULL symbol on both sides (never 'already in silver')."""
+KEYS = ["symbol", "trade_date"]
+
+
+def _premerge_from_writes(spark, path, valid, rejects, silver_keys):
+    """premerge_metrics the way build_silver feeds it: the in-batch dedup
+    of ``valid`` upserted into a silver day seeded with ``silver_keys``,
+    plus the valid and reject row counts."""
+    if silver_keys is not None:
+        upsert_partitions(spark, silver_keys.withColumn("volume", F.lit(0)), path, KEYS)
+    deduped = dedup_latest(valid, KEYS, [F.desc("volume")]).select(*KEYS, "volume")
+    core = upsert_partitions(spark, deduped, path, KEYS, partition_values=[D1])
+    return premerge_metrics(valid.count(), rejects.count(), core)
+
+
+def test_premerge_one_pass_matches_four_counts(spark, tmp_path):
+    """premerge_metrics, built from the silver upsert's MergeCounts and the
+    valid/reject row counts, equals the four-count definition on a
+    restatement: duplicate keys, a reject-only key, a key with both a
+    valid and a rejected row, a NULL volume (valid), a NULL symbol (now a
+    NULL_SYMBOL reject) and a NULL-keyed silver row (never 'present')."""
     d = D1
     bronze = spark.createDataFrame(
         [
@@ -260,7 +280,7 @@ def test_premerge_one_pass_matches_four_counts(spark):
             ("EEE", d, -7),
             ("FFF", d, 3),    # new → insert
             ("FFF", d, 3),
-            (None, d, 1),     # NULL key: insert (equi-join never matches)
+            (None, d, 1),     # NULL symbol: rejected
         ],
         "symbol string, trade_date date, volume int",
     )
@@ -268,10 +288,118 @@ def test_premerge_one_pass_matches_four_counts(spark):
         [("AAA", d), ("BBB", d), ("DDD", d), ("EEE", d), ("ZZZ", d), (None, d)],
         "symbol string, trade_date date",
     )
-    valid, rejects = split_rejects(bronze, F.col("volume") >= 0, NEGATIVE_VOLUME)
-    got = premerge_metrics(valid, rejects, silver_keys)
+    valid, rejects = split_by_reason(bronze, eod_reject_reason())
+    got = _premerge_from_writes(spark, str(tmp_path / "restate"), valid, rejects, silver_keys)
     assert got == _premerge_four_counts(valid, rejects, silver_keys)
-    assert got == (10, 2, 3, 3)
+    assert got == (10, 3, 2, 3)
     # first load: no silver yet
     empty = silver_keys.limit(0)
-    assert premerge_metrics(valid, rejects, None) == _premerge_four_counts(valid, rejects, empty)
+    first = _premerge_from_writes(spark, str(tmp_path / "first"), valid, rejects, None)
+    assert first == _premerge_four_counts(valid, rejects, empty) == (10, 3, 5, 0)
+
+
+def _day_rows(spark, path, day):
+    return spark.read.parquet(path).filter(F.col("trade_date") == F.lit(day))
+
+
+def _independent_metrics(spark, wh, day, silver_keys_before):
+    """RunMetrics' six counts from the warehouse alone: the four-count
+    premerge reference over the day's bronze rows (re-normalized and split
+    here, without the pipeline's helpers) against the silver keys taken
+    before the run, and the day's CORE and FACT rows."""
+    bronze = _day_rows(spark, wh.bronze, day).withColumn("symbol", F.upper(F.trim("symbol")))
+    bad = (F.coalesce(F.col("symbol"), F.lit("")) == "") | (F.col("volume") < 0)
+    valid = bronze.filter(~F.coalesce(bad, F.lit(False)))
+    rejects = bronze.filter(F.coalesce(bad, F.lit(False)))
+    keys = spark.createDataFrame(silver_keys_before, "symbol string, trade_date date")
+    return _premerge_four_counts(valid, rejects, keys) + (
+        _day_rows(spark, wh.silver, day).count(),
+        _day_rows(spark, wh.fact_daily_price, day).count(),
+    )
+
+
+def test_run_metrics_match_independent_counts(pipeline_run, tmp_path):
+    """RunMetrics, now read off the writes, equals independent counts for
+    a load of a new date, a corrected restate (new prices, two new
+    symbols, a second delivery) and an idempotent re-run."""
+    spark, wh, landing, *_ = pipeline_run
+    wh = _clone_warehouse(wh, tmp_path)
+    new_day, corrected = str(tmp_path / "new_day"), str(tmp_path / "corrected")
+    write_eod_csv(new_day, D3)
+    write_eod_csv(corrected, D1, n_symbols=52, seed=8)
+    for path, day, inserts_updates in (
+        (new_day, D3, (51, 0)),
+        (corrected, D1, (2, 51)),
+        (landing, D2, (0, 51)),
+    ):
+        before = [tuple(r) for r in _day_rows(spark, wh.silver, day).select(*KEYS).collect()]
+        m = run(spark, wh, path, day, notifier=lambda s: None)
+        got = (m.raw_cnt, m.reject_cnt, m.est_inserts, m.est_updates, m.core_cnt, m.fact_cnt)
+        assert got == _independent_metrics(spark, wh, day, before), day
+        assert got[2:4] == inserts_updates, day
+
+
+def _file_stats(path: str) -> dict[str, tuple[int, int]]:
+    out = {}
+    for base, _, names in os.walk(path):
+        for n in names:
+            st = os.stat(os.path.join(base, n))
+            out[os.path.relpath(os.path.join(base, n), path)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def test_null_symbols_are_rejected_once(spark, tmp_path):
+    """Empty, literal-NULL and blank symbols are NULL_SYMBOL rejects, not
+    silver rows. Re-running the file three times writes each reject key
+    once (the insert's key match is null-safe), adds no dim_security row
+    and no dim or reject file, and CORE and FACT agree every time."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    d = D1.isoformat()
+    (landing / "eod_null_symbols.csv").write_text(
+        "\n".join([
+            "trade_date,symbol,open,high,low,close,volume",
+            f"{d},AAA,1.0,2.0,0.5,1.5,100",
+            f"{d},BBB,3.0,4.0,2.5,3.5,200",
+            f"{d},,5.0,6.0,4.5,5.5,300",
+            f"{d},NULL,7.0,8.0,6.5,7.5,400",
+            f'{d},"  ",9.0,9.5,8.5,9.0,500',
+        ]) + "\n"
+    )
+    wh = Warehouse(str(tmp_path / "wh"))
+    files = []
+    for i in range(1, 4):
+        m = run(spark, wh, str(landing), D1, notifier=lambda s: None)
+        assert (m.raw_cnt, m.reject_cnt) == (5 * i, 3 * i)
+        assert (m.est_inserts, m.est_updates) == ((2, 0) if i == 1 else (0, 2))
+        assert m.core_cnt == m.fact_cnt == 2
+        dim = {tuple(r) for r in spark.read.parquet(wh.dim_security).collect()}
+        assert dim == {(1, "AAA"), (2, "BBB")}
+        rej = spark.read.parquet(wh.reject).select("symbol", "reject_reason", "open").collect()
+        assert sorted(map(tuple, rej), key=str) == [("", NULL_SYMBOL, 9.0), (None, NULL_SYMBOL, 5.0)]
+        files.append([_file_stats(wh.dim_security), _file_stats(wh.reject)])
+    assert files[0] == files[1] == files[2]
+
+
+def test_all_reject_day_counts_without_observations(pipeline_run, tmp_path):
+    """A new date whose every row is rejected gives exact metrics. With no
+    valid row, AQE drops the silver write's empty stages together with
+    the counts observed inside them, so build_silver must count the day
+    instead of waiting on them."""
+    spark, wh, *_ = pipeline_run
+    wh = _clone_warehouse(wh, tmp_path)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    d = D3.isoformat()
+    (landing / "eod_rejects_only.csv").write_text(
+        "\n".join([
+            "trade_date,symbol,open,high,low,close,volume",
+            f"{d},AAA_X,1.0,2.0,0.5,1.5,-100",
+            f"{d},BBB_X,3.0,4.0,2.5,3.5,-200",
+            f"{d},,5.0,6.0,4.5,5.5,300",
+        ]) + "\n"
+    )
+    m = run(spark, wh, str(landing), D3, notifier=lambda s: None)
+    got = (m.raw_cnt, m.reject_cnt, m.est_inserts, m.est_updates, m.core_cnt, m.fact_cnt)
+    assert got == (3, 3, 0, 0, 0, 0)
+    assert _day_rows(spark, wh.reject, D3).count() == 3
