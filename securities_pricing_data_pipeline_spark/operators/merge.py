@@ -20,6 +20,11 @@ move into the table only when that count is above 0. First write wins;
 existing rows are never updated, and an insert with nothing new leaves
 the table's files untouched.
 
+The streaming-CDC apply (``merge_batch``) is a keyed last-writer-wins
+merge instead: the micro-batch's winners are re-reduced with the whole
+table and the table is republished. Existence checks and reads go
+through ``tables.table_exists`` and ``tables.read_table``.
+
 Note (SURVEY A5): the reference header comments promise a guarded UPDATE,
 but the code's ``WHEN MATCHED`` has no guard — updates are unconditional;
 we implement the code's semantics (source wins over target).
@@ -40,14 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from securities_pricing_data_pipeline_spark.operators.dedup import dedup_latest
-
-
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
+from securities_pricing_data_pipeline_spark.tables import fs_path, read_table, table_exists
 
 
 class MergeCounts(NamedTuple):
@@ -94,9 +92,9 @@ def absent_rows(
     input order or partitioning."""
     cols = source.columns
     tagged = source.withColumn("__is_src", F.lit(1))
-    if _path_exists(spark, path):
+    if table_exists(spark, path):
         key_schema = T.StructType([source.schema[k] for k in keys])
-        target = spark.read.schema(key_schema).parquet(path)
+        target = read_table(spark, path, key_schema)
         tagged = tagged.unionByName(
             target.withColumn("__is_src", F.lit(0)), allowMissingColumns=True
         )
@@ -118,11 +116,9 @@ def append_staged(spark: SparkSession, rows: DataFrame, path: str) -> int:
     directory is always removed. So an empty append leaves the table's
     files (names, sizes, mtimes) as they were, and an empty append to a
     missing table leaves no directory behind."""
-    hadoop = spark.sparkContext._jvm.org.apache.hadoop.fs
-    table = hadoop.Path(path)
-    fs = table.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    fs, table = fs_path(spark, path)
     existed = fs.exists(table)
-    staging = hadoop.Path(table, f"_staging-{uuid.uuid4().hex}")
+    _, staging = fs_path(spark, path, f"_staging-{uuid.uuid4().hex}")
     obs = Observation()
     n = 0
     try:
@@ -132,7 +128,7 @@ def append_staged(spark: SparkSession, rows: DataFrame, path: str) -> int:
             for st in fs.listStatus(staging):
                 name = st.getPath().getName()
                 if name.startswith("part-") and not fs.rename(
-                    st.getPath(), hadoop.Path(table, name)
+                    st.getPath(), fs_path(spark, path, name)[1]
                 ):
                     raise OSError(f"could not move {name} into {path}")
     finally:
@@ -140,126 +136,6 @@ def append_staged(spark: SparkSession, rows: DataFrame, path: str) -> int:
         if not existed and not n:
             fs.delete(table, True)
     return n
-
-
-class ParquetPartitionOverwriteFormat:
-    """The table format: plain parquet + dynamic partition overwrite.
-
-    Correct and file-pruned when the merge unit aligns with the partition
-    column (the reference's one-date-per-run shape). When keyed updates
-    scatter across partitions, each batch re-reduces |batch ∪
-    touched-partitions| (``SCALE_PROBE.md`` cdc_10m: 26.2 s for 10 M rows
-    over 1 M keys)."""
-
-    def exists(self, spark: SparkSession, path: str) -> bool:
-        return _path_exists(spark, path)
-
-    def read(
-        self, spark: SparkSession, path: str, schema: T.StructType | None = None
-    ) -> DataFrame:
-        """Read the table; with ``schema`` the footers are not sampled, so
-        no schema-inference job runs. A schema may name a subset of the
-        columns (only those are read)."""
-        reader = spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(path)
-
-    def upsert_partitions(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        path: str,
-        keys: Sequence[str],
-        partition_col: str = "trade_date",
-        prefer_source_order: Sequence[Column] | None = None,
-        partition_values: Sequence | None = None,
-    ) -> MergeCounts:
-        """Rewrite the partitions ``source`` touches as dedup(source ∪
-        their existing rows), source rows winning (``prefer_source_order``
-        breaks ties among same-key source rows). One write; its
-        ``MergeCounts`` are observed on it (no re-read).
-
-        ``partition_values`` lists the ``partition_col`` values of
-        ``source`` when the caller knows them (the daily pipeline rewrites
-        exactly its trading date). It must cover every value in
-        ``source``: existing rows of a value left out are dropped. When
-        None, the values are collected from ``source`` (cached for it).
-        """
-        exists = self.exists(spark, path)
-        cached = exists and partition_values is None
-        if cached:
-            source = source.cache()
-            partition_values = [
-                r[0] for r in source.select(partition_col).distinct().collect()
-            ]
-        tagged = source.withColumn("__is_src", F.lit(1))
-        if exists:
-            # the target has the source's columns: reading with its schema
-            # skips inference (a column the files lack reads as NULL); the
-            # isin filter prunes to the touched partitions
-            existing = self.read(spark, path, source.schema).filter(
-                F.col(partition_col).isin(list(partition_values))
-            )
-            tagged = tagged.unionByName(existing.withColumn("__is_src", F.lit(0)))
-        w = Window.partitionBy(*keys).orderBy(
-            F.desc("__is_src"), *(prefer_source_order or [])
-        )
-        first, src = F.col("__rn") == 1, F.col("__is_src") == 1
-        obs = Observation()
-        ranked = tagged.withColumn("__rn", F.row_number().over(w)).observe(
-            obs,
-            F.count_if(first & src).alias("source"),
-            F.count_if(~src).alias("existing"),
-            F.count_if(first).alias("written"),
-        )
-        # dynamic partitionOverwriteMode (session.py) → only these partitions move
-        ranked.filter(first).drop("__rn", "__is_src").write.mode("overwrite").partitionBy(
-            partition_col
-        ).parquet(path)
-        if cached:
-            source.unpersist()
-        c = obs.get
-        return MergeCounts(
-            inserted=c["written"] - c["existing"],
-            updated=c["source"] + c["existing"] - c["written"],
-            written=c["written"],
-        )
-
-    def insert_if_absent(
-        self,
-        spark: SparkSession,
-        source: DataFrame,
-        path: str,
-        keys: Sequence[str],
-    ) -> int:
-        """Append the rows of ``source`` whose key is not yet in the table
-        (``absent_rows``) in one staged write; returns how many."""
-        return append_staged(spark, absent_rows(spark, source, path, keys), path)
-
-    def merge_batch(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        path: str,
-        keys: Sequence[str],
-        order_cols: Sequence[str],
-    ) -> None:
-        """Streaming-CDC apply unit (the foreachBatch sink body): reduce
-        the micro-batch to one winner per key by the ``order_cols`` total
-        order, LWW-merge with the current table, republish atomically.
-        Cost model: |batch keys ∪ table keys| rows re-reduced per batch —
-        state lives in the table, not executor memory."""
-        winners = lww_reduce(batch, keys, order_cols)
-        if self.exists(spark, path):
-            winners = lww_reduce(
-                self.read(spark, path).unionByName(winners), keys, order_cols
-            )
-        # materialize before republishing over the path we just read
-        winners.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)
-
-
-_DEFAULT = ParquetPartitionOverwriteFormat()
 
 
 def upsert_partitions(
@@ -271,9 +147,61 @@ def upsert_partitions(
     prefer_source_order: Sequence[Column] | None = None,
     partition_values: Sequence | None = None,
 ) -> MergeCounts:
-    """A5 upsert — see ``ParquetPartitionOverwriteFormat.upsert_partitions``."""
-    return _DEFAULT.upsert_partitions(
-        spark, source, path, keys, partition_col, prefer_source_order, partition_values
+    """A5 upsert: rewrite the partitions ``source`` touches as
+    dedup(source ∪ their existing rows), source rows winning
+    (``prefer_source_order`` breaks ties among same-key source rows). One
+    write; its ``MergeCounts`` are observed on it (no re-read).
+
+    ``partition_values`` lists the ``partition_col`` values of ``source``
+    when the caller knows them (the daily pipeline rewrites exactly its
+    trading date). It must cover every value in ``source``: existing rows
+    of a value left out are dropped. When None, the values are collected
+    from ``source`` (cached for it).
+
+    Correct and file-pruned when the merge unit aligns with the partition
+    column (the reference's one-date-per-run shape). When keyed updates
+    scatter across partitions, each call re-reduces |source ∪ touched
+    partitions| (``SCALE_PROBE.md`` cdc_10m: 26.2 s for 10 M rows over
+    1 M keys).
+    """
+    exists = table_exists(spark, path)
+    cached = exists and partition_values is None
+    if cached:
+        source = source.cache()
+        partition_values = [
+            r[0] for r in source.select(partition_col).distinct().collect()
+        ]
+    tagged = source.withColumn("__is_src", F.lit(1))
+    if exists:
+        # the target has the source's columns: reading with its schema
+        # skips inference (a column the files lack reads as NULL); the
+        # isin filter prunes to the touched partitions
+        existing = read_table(spark, path, source.schema).filter(
+            F.col(partition_col).isin(list(partition_values))
+        )
+        tagged = tagged.unionByName(existing.withColumn("__is_src", F.lit(0)))
+    w = Window.partitionBy(*keys).orderBy(
+        F.desc("__is_src"), *(prefer_source_order or [])
+    )
+    first, src = F.col("__rn") == 1, F.col("__is_src") == 1
+    obs = Observation()
+    ranked = tagged.withColumn("__rn", F.row_number().over(w)).observe(
+        obs,
+        F.count_if(first & src).alias("source"),
+        F.count_if(~src).alias("existing"),
+        F.count_if(first).alias("written"),
+    )
+    # dynamic partitionOverwriteMode (session.py) → only these partitions move
+    ranked.filter(first).drop("__rn", "__is_src").write.mode("overwrite").partitionBy(
+        partition_col
+    ).parquet(path)
+    if cached:
+        source.unpersist()
+    c = obs.get
+    return MergeCounts(
+        inserted=c["written"] - c["existing"],
+        updated=c["source"] + c["existing"] - c["written"],
+        written=c["written"],
     )
 
 
@@ -283,9 +211,26 @@ def insert_if_absent(
     path: str,
     keys: Sequence[str],
 ) -> int:
-    """A6 insert-only merge in one staged write; returns the rows inserted."""
-    return _DEFAULT.insert_if_absent(spark, source, path, keys)
+    """A6 insert-only merge: append the rows of ``source`` whose key is
+    not yet in the table (``absent_rows``) in one staged write; returns
+    how many."""
+    return append_staged(spark, absent_rows(spark, source, path, keys), path)
 
 
-# back-compat alias (pre-seam name used by early tests/callers)
-_table_exists = _path_exists
+def merge_batch(
+    spark: SparkSession,
+    batch: DataFrame,
+    path: str,
+    keys: Sequence[str],
+    order_cols: Sequence[str],
+) -> None:
+    """Streaming-CDC apply unit (the foreachBatch sink body): reduce the
+    micro-batch to one winner per key by the ``order_cols`` total order,
+    LWW-merge with the current table, republish. Cost model: |batch keys
+    ∪ table keys| rows re-reduced per batch — state lives in the table,
+    not executor memory."""
+    winners = lww_reduce(batch, keys, order_cols)
+    if table_exists(spark, path):
+        winners = lww_reduce(read_table(spark, path).unionByName(winners), keys, order_cols)
+    # materialize before republishing over the path we just read
+    winners.localCheckpoint(eager=True).write.mode("overwrite").parquet(path)

@@ -37,18 +37,6 @@ def split_by_reason(df: DataFrame, reason: Column) -> tuple[DataFrame, DataFrame
     return valid, rejects
 
 
-def split_rejects(
-    df: DataFrame, valid_cond: Column, reason: str
-) -> tuple[DataFrame, DataFrame]:
-    """Split into (valid, rejects) on one condition; rejects carry
-    ``reject_reason``. Null-safe: rows where the condition is NULL are
-    treated as valid (matching the reference, whose reject predicate
-    ``VOLUME < 0`` is false for NULL volumes).
-    """
-    fails = valid_cond.isNotNull() & ~valid_cond
-    return split_by_reason(df, F.when(fails, F.lit(reason)))
-
-
 class EmptyLoadError(AssertionError):
     pass
 

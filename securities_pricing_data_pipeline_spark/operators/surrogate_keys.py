@@ -17,15 +17,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from securities_pricing_data_pipeline_spark.operators.merge import _table_exists
+from securities_pricing_data_pipeline_spark.tables import read_table, table_exists
 
 
 def next_id(spark: SparkSession, dim_path: str, id_col: str = "security_id") -> int:
     """A3: COALESCE(MAX(id), 0) + 1 high-water mark. Reads only the
     (long) id column by declared schema: no schema-inference job."""
-    if not _table_exists(spark, dim_path):
+    if not table_exists(spark, dim_path):
         return 1
-    ids = spark.read.schema(T.StructType([T.StructField(id_col, T.LongType())])).parquet(dim_path)
+    ids = read_table(spark, dim_path, T.StructType([T.StructField(id_col, T.LongType())]))
     row = ids.agg(F.coalesce(F.max(id_col), F.lit(0))).first()
     return int(row[0]) + 1
 

@@ -7,9 +7,10 @@ observed on a write the run makes anyway, so no metric launches a Spark
 job of its own: the raw and reject row counts ride the silver write, the
 insert/update split is the silver upsert's ``MergeCounts``, and the
 post-merge CORE/FACT counts are the rows the two upserts wrote to the
-date's partition. ``premerge_metrics`` only reduces those numbers. Both
-come back as a plain dataclass — the control-plane scalar is a function
-return value, not an orchestration-framework artifact.
+date's partition. ``premerge_metrics`` and ``postmerge_counts`` only
+reduce those numbers. The results come back as a plain dataclass — the
+control-plane scalar is a function return value, not an
+orchestration-framework artifact.
 """
 
 from __future__ import annotations
@@ -17,14 +18,7 @@ from __future__ import annotations
 import datetime as dt
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-
-from securities_pricing_data_pipeline_spark.operators.merge import MergeCounts, _table_exists
-from securities_pricing_data_pipeline_spark.schemas import (
-    EOD_PRICES_SCHEMA,
-    FACT_DAILY_PRICE_SCHEMA,
-)
+from securities_pricing_data_pipeline_spark.operators.merge import MergeCounts
 
 
 @dataclass
@@ -49,35 +43,8 @@ def premerge_metrics(
     return valid_rows + reject_rows, reject_rows, core.inserted, core.updated
 
 
-def postmerge_counts(
-    spark: SparkSession,
-    silver_path: str,
-    fact_path: str,
-    trading_date: dt.date,
-    written: tuple[int | None, int | None] = (None, None),
-) -> tuple[int, int]:
-    """A9: CORE vs FACT row counts for the date.
-
-    ``written`` carries the counts the two upserts observed on their own
-    writes (the rewritten date partition's rows). Only a count that is
-    None — a caller with no observed count — is re-counted with a
-    partition-pruned scan.
-    """
-
-    def count_for(path: str, schema, n: int | None) -> int:
-        if n is not None:
-            return n
-        if not _table_exists(spark, path):
-            return 0
-        return (
-            spark.read.schema(schema)
-            .parquet(path)
-            .filter(F.col("trade_date") == F.lit(trading_date))
-            .count()
-        )
-
-    core_n, fact_n = written
-    return (
-        count_for(silver_path, EOD_PRICES_SCHEMA, core_n),
-        count_for(fact_path, FACT_DAILY_PRICE_SCHEMA, fact_n),
-    )
+def postmerge_counts(core: MergeCounts, fact: MergeCounts) -> tuple[int, int]:
+    """A9: CORE vs FACT row counts for the date (8.:16-25) — the rows the
+    silver and fact upserts wrote to the date's partition, observed on
+    those writes."""
+    return core.written, fact.written

@@ -10,8 +10,9 @@ writes.
 Stage map (reference task → here):
   t01 download            → sources.eod_api (driver fetch / backfill_source)
   t02 verify local file   → sources.csv_source.file_exists_gate
-  t03 upload S3           → write_partitioned to the bronze root (path IS
-                            the date layout: trade_date=YYYY-MM-DD/)
+  t03 upload S3           → ingest_bronze's partitioned append to the
+                            bronze root (the path IS the date layout:
+                            trade_date=YYYY-MM-DD/)
   s01 COPY INTO RAW       → sources.csv_source.read_eod_csv → bronze append
   s02 check loaded        → the row count observed on the bronze append;
                             operators.quality.existence_gate (a real
@@ -21,17 +22,18 @@ Stage map (reference task → here):
                             of counts observed on the s04 writes: raw and
                             reject rows on the silver write, inserted vs
                             updated keys from the upsert's MergeCounts
-  s04 merge CORE+REJECT   → normalize → reject split (NEGATIVE_VOLUME,
-                            NULL_SYMBOL) → dedup_latest →
+  s04 merge CORE+REJECT   → silver_rows (normalize → reject split
+                            (NEGATIVE_VOLUME, NULL_SYMBOL) → dedup_latest;
+                            shared with streaming.ingest) →
                             upsert_partitions / insert_if_absent
   s05 merge DIM_SECURITY  → one null-safe anti-join of the day's symbols
                             (merge.absent_rows) → surrogate_keys.assign_ids
                             → one staged append (merge.append_staged)
   s06 merge DIM_DATE      → date derivations + insert_if_absent
   s07 merge FACT          → broadcast star join + upsert_partitions
-  s08 postmerge metrics   → plans.metrics.postmerge_counts, fed the row
-                            counts the s04/s07 upserts observed on their
-                            own writes (no re-read of silver or fact)
+  s08 postmerge metrics   → plans.metrics.postmerge_counts, a pure reducer
+                            of the s04/s07 upserts' MergeCounts (the rows
+                            each wrote; no re-read of silver or fact)
   t05 Slack summary       → plans.notify (pluggable, fires on success AND
                             failure — the reference's trigger_rule=all_done)
 
@@ -47,7 +49,7 @@ as they were — an insert with nothing new moves no file (tested at the
 file level).
 
 Every warehouse read passes its declared schema from ``schemas.py``
-(``Warehouse.read``), so no read runs a schema-inference job and the
+(``tables.read_table``), so no read runs a schema-inference job and the
 layers really are schema-on-read, never inferred.
 """
 
@@ -99,15 +101,16 @@ from securities_pricing_data_pipeline_spark.schemas import (
     RAW_EOD_PRICES_SCHEMA,
 )
 from securities_pricing_data_pipeline_spark.sources.csv_source import read_eod_csv
-from securities_pricing_data_pipeline_spark.tables import Warehouse
+from securities_pricing_data_pipeline_spark.tables import Warehouse, read_table
+
+#: the business key of silver (CORE.EOD_PRICES) and of its reject audit
+SILVER_KEYS = ("symbol", "trade_date")
 
 
-def _day(
-    spark: SparkSession, wh: Warehouse, path: str, schema, trading_date: dt.date
-) -> DataFrame:
+def _day(spark: SparkSession, path: str, schema, trading_date: dt.date) -> DataFrame:
     """One trade_date partition of a date-partitioned table, read with its
     declared schema (partition-pruned, no inference job)."""
-    return wh.read(spark, path, schema).filter(F.col("trade_date") == F.lit(trading_date))
+    return read_table(spark, path, schema).filter(F.col("trade_date") == F.lit(trading_date))
 
 
 def ingest_bronze(
@@ -122,28 +125,31 @@ def ingest_bronze(
     raw.observe(appended, F.count(F.lit(1)).alias("n")).write.mode("append").partitionBy(
         "trade_date"
     ).parquet(wh.bronze)
-    loaded = _day(spark, wh, wh.bronze, RAW_EOD_PRICES_SCHEMA, trading_date)
+    loaded = _day(spark, wh.bronze, RAW_EOD_PRICES_SCHEMA, trading_date)
     if not appended.get["n"]:
         existence_gate(loaded, f"bronze load for {trading_date}")  # s02
     return loaded
 
 
-def build_silver(
-    spark: SparkSession, wh: Warehouse, trading_date: dt.date
-) -> tuple[tuple[int, int, int, int], int]:
-    """s03+s04: normalize → reject split → dedup → upsert CORE, insert-only
-    REJECT. Returns the premerge metrics (raw, rejects, est_ins, est_upd)
-    and the row count the CORE upsert wrote to the date's partition."""
-    bronze = _day(spark, wh, wh.bronze, RAW_EOD_PRICES_SCHEMA, trading_date)
+def silver_rows(
+    bronze: DataFrame, counts: Observation | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The s04 transform of bronze rows, shared by ``build_silver`` and the
+    streaming ingest: normalize the symbol, split off the rejects
+    (``eod_reject_reason``) and keep one row per ``SILVER_KEYS``. Returns
+    (core rows, reject rows) in the CORE and REJECT column orders.
+
+    With ``counts``, the raw and reject row counts of ``bronze`` are
+    observed on the core rows' plan only, so they ride the silver write."""
     normalized = bronze.withColumn("symbol", normalize_symbol(F.col("symbol")))
     reason = eod_reject_reason()
-    # the day's raw and reject row counts ride the silver write
-    read_obs = Observation()
-    counted = normalized.observe(
-        read_obs,
-        F.count(F.lit(1)).alias("raw"),
-        F.count_if(reason.isNotNull()).alias("rejects"),
-    )
+    counted = normalized
+    if counts is not None:
+        counted = normalized.observe(
+            counts,
+            F.count(F.lit(1)).alias("raw"),
+            F.count_if(reason.isNotNull()).alias("rejects"),
+        )
     valid, _ = split_by_reason(counted, reason)
     _, rejects = split_by_reason(normalized, reason)
 
@@ -153,27 +159,38 @@ def build_silver(
     # re-runs are deterministic (A7 needs a total order).
     deduped = dedup_latest(
         valid,
-        ["symbol", "trade_date"],
+        SILVER_KEYS,
         [F.desc("_ingest_ts"), F.desc("_src_file")]
         + [F.desc_nulls_last(c) for c in ("volume", "close", "open", "high", "low")],
     )
     core_rows = deduped.select(
         "trade_date", "symbol", "open", "high", "low", "close", "volume"
     ).withColumn("load_ts", F.current_timestamp())
-    # metrics ride the write job itself (Observation accumulators) —
-    # no second scan, unlike the reference's per-metric COUNT statements
-    core_rows, write_obs = observe_write_metrics(core_rows, "silver_write")
-    core = upsert_partitions(
-        spark, core_rows, wh.silver, keys=["symbol", "trade_date"],
-        partition_values=[trading_date],
-    )
-
-    # insert-only reject audit (first reject wins, 4.:24-45)
     reject_rows = rejects.select(
         "trade_date", "symbol", "open", "high", "low", "close", "volume",
         "reject_reason", "_src_file", "_ingest_ts",
     )
-    insert_if_absent(spark, reject_rows, wh.reject, keys=["symbol", "trade_date"])
+    return core_rows, reject_rows
+
+
+def build_silver(
+    spark: SparkSession, wh: Warehouse, trading_date: dt.date
+) -> tuple[tuple[int, int, int, int], MergeCounts]:
+    """s03+s04: ``silver_rows`` → upsert CORE, insert-only REJECT. Returns
+    the premerge metrics (raw, rejects, est_ins, est_upd) and the CORE
+    upsert's counts."""
+    bronze = _day(spark, wh.bronze, RAW_EOD_PRICES_SCHEMA, trading_date)
+    # the day's raw and reject row counts ride the silver write
+    read_obs = Observation()
+    core_rows, reject_rows = silver_rows(bronze, read_obs)
+    # metrics ride the write job itself (Observation accumulators) —
+    # no second scan, unlike the reference's per-metric COUNT statements
+    core_rows, write_obs = observe_write_metrics(core_rows, "silver_write")
+    core = upsert_partitions(
+        spark, core_rows, wh.silver, keys=SILVER_KEYS, partition_values=[trading_date]
+    )
+    # insert-only reject audit (first reject wins, 4.:24-45)
+    insert_if_absent(spark, reject_rows, wh.reject, keys=SILVER_KEYS)
 
     if core.inserted + core.updated:
         counts = read_obs.get
@@ -184,14 +201,14 @@ def build_silver(
         # observations inside them, with an empty relation, so neither is
         # reported. Every bronze row of the day is then a reject.
         raw = reject_cnt = bronze.count()
-    return premerge_metrics(raw - reject_cnt, reject_cnt, core), core.written
+    return premerge_metrics(raw - reject_cnt, reject_cnt, core), core
 
 
 def build_dim_security(spark: SparkSession, wh: Warehouse, trading_date: dt.date) -> int:
     """s05: append-only security dim with deterministic surrogate ids. The
     day's symbols are anti-joined with the dim once, numbered from the
     high-water mark and published in one staged append."""
-    day_symbols = _day(spark, wh, wh.silver, EOD_PRICES_SCHEMA, trading_date).select("symbol")
+    day_symbols = _day(spark, wh.silver, EOD_PRICES_SCHEMA, trading_date).select("symbol")
     new_symbols = absent_rows(spark, day_symbols, wh.dim_security, ["symbol"])
     start = next_id(spark, wh.dim_security)
     return append_staged(spark, assign_ids(new_symbols, start), wh.dim_security)
@@ -225,8 +242,8 @@ def build_dim_date(spark: SparkSession, wh: Warehouse, trading_date: dt.date) ->
 def build_fact(spark: SparkSession, wh: Warehouse, trading_date: dt.date) -> MergeCounts:
     """s07: star join CORE←dims (broadcast dims) → per-date fact upsert.
     Returns the upsert's counts, observed on its write."""
-    core = _day(spark, wh, wh.silver, EOD_PRICES_SCHEMA, trading_date)
-    dim_sec = wh.read(spark, wh.dim_security, DIM_SECURITY_SCHEMA)
+    core = _day(spark, wh.silver, EOD_PRICES_SCHEMA, trading_date)
+    dim_sec = read_table(spark, wh.dim_security, DIM_SECURITY_SCHEMA)
     fact = (
         core.join(F.broadcast(dim_sec), "symbol")
         .select(
@@ -255,15 +272,12 @@ def run(
     m = RunMetrics(trading_date=trading_date)
     try:
         ingest_bronze(spark, wh, landing_path, trading_date)
-        pre, core_written = build_silver(spark, wh, trading_date)
+        pre, core = build_silver(spark, wh, trading_date)
         m.raw_cnt, m.reject_cnt, m.est_inserts, m.est_updates = pre
         build_dim_security(spark, wh, trading_date)
         build_dim_date(spark, wh, trading_date)
         fact = build_fact(spark, wh, trading_date)
-        m.core_cnt, m.fact_cnt = postmerge_counts(
-            spark, wh.silver, wh.fact_daily_price, trading_date,
-            written=(core_written, fact.written),
-        )
+        m.core_cnt, m.fact_cnt = postmerge_counts(core, fact)
     except Exception as exc:
         m.notes.append(f"FAILED: {type(exc).__name__}: {exc}")
         notifier(format_summary(m, status="FAILED"))

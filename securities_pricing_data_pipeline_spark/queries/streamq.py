@@ -432,16 +432,12 @@ def stream_events_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ev.repartition(8, "user_id").write.mode("overwrite").parquet(feed_dir)
 
-    # the apply unit is the table format's merge_batch — one winner per
-    # user by the (ts, event_id) total order, re-reduced against the table
-    from securities_pricing_data_pipeline_spark.operators.merge import (
-        ParquetPartitionOverwriteFormat,
-    )
+    # the apply unit is merge.merge_batch — one winner per user by the
+    # (ts, event_id) total order, re-reduced against the table
+    from securities_pricing_data_pipeline_spark.operators import merge
 
-    fmt = ParquetPartitionOverwriteFormat()
-
-    def merge(batch: DataFrame, batch_id: int) -> None:
-        fmt.merge_batch(
+    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+        merge.merge_batch(
             batch.sparkSession,
             batch,
             state_dir,
@@ -456,7 +452,7 @@ def stream_events_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(feed_dir)
         )
         q = (
-            stream.writeStream.foreachBatch(merge)
+            stream.writeStream.foreachBatch(apply_batch)
             .trigger(availableNow=True)
             .start()
         )

@@ -109,14 +109,3 @@ FACT_DAILY_PRICE_SCHEMA = T.StructType(
         T.StructField("load_ts", T.TimestampType(), False),
     ]
 )
-
-# processed-file ledger — replaces Snowflake load history so bronze ingestion
-# can be idempotent per file even though the reference's FORCE=TRUE re-loads
-# (1. copy_to_raw.sql:39); see sources/ledger.py
-INGEST_LEDGER_SCHEMA = T.StructType(
-    [
-        T.StructField("src_file", T.StringType(), False),
-        T.StructField("ingest_ts", T.TimestampType(), False),
-        T.StructField("row_count", T.LongType(), False),
-    ]
-)

@@ -1,10 +1,12 @@
 """Structured Streaming ingestion variant (SURVEY §7 item 8).
 
 The batch pipeline's unit of work is a trading date; the streaming variant
-watches the landing directory and applies the SAME silver merge per
-micro-batch via ``foreachBatch`` — one code path for batch and streaming
-(the foreachBatch frame is just a DataFrame, so operators/plans are reused
-verbatim).
+watches the landing directory and applies the same silver merge per
+micro-batch via ``foreachBatch``. The foreachBatch frame is just a
+DataFrame, so both build their silver and reject rows with one function,
+``plans.pipeline.silver_rows``, and write them with the same merges; only
+the partition values differ (the batch run knows its one trading date, a
+micro-batch collects the dates it holds).
 
 Scale posture: file-source streams scale by listing cost — at production
 volume use a notification-based source; ``maxFilesPerTrigger`` bounds
@@ -17,40 +19,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from securities_pricing_data_pipeline_spark.functions.normalize import normalize_symbol
-from securities_pricing_data_pipeline_spark.operators.dedup import dedup_latest
 from securities_pricing_data_pipeline_spark.operators.merge import (
     insert_if_absent,
     upsert_partitions,
 )
-from securities_pricing_data_pipeline_spark.operators.quality import (
-    eod_reject_reason,
-    split_by_reason,
-)
+from securities_pricing_data_pipeline_spark.plans.pipeline import SILVER_KEYS, silver_rows
 from securities_pricing_data_pipeline_spark.schemas import EOD_CSV_SCHEMA
 from securities_pricing_data_pipeline_spark.tables import Warehouse
 
 
 def _merge_batch(spark: SparkSession, wh: Warehouse, batch: DataFrame) -> None:
-    """The per-micro-batch silver merge — same semantics as
-    plans.pipeline.build_silver, applied to whatever dates the batch holds."""
-    normalized = batch.withColumn("symbol", normalize_symbol(F.col("symbol")))
-    valid, rejects = split_by_reason(normalized, eod_reject_reason())
-    deduped = dedup_latest(
-        valid,
-        ["symbol", "trade_date"],
-        [F.desc("_ingest_ts"), F.desc("_src_file")]
-        + [F.desc_nulls_last(c) for c in ("volume", "close", "open", "high", "low")],
-    )
-    core = deduped.select(
-        "trade_date", "symbol", "open", "high", "low", "close", "volume"
-    ).withColumn("load_ts", F.current_timestamp())
-    upsert_partitions(spark, core, wh.silver, keys=["symbol", "trade_date"])
-    reject_rows = rejects.select(
-        "trade_date", "symbol", "open", "high", "low", "close", "volume",
-        "reject_reason", "_src_file", "_ingest_ts",
-    )
-    insert_if_absent(spark, reject_rows, wh.reject, keys=["symbol", "trade_date"])
+    """The per-micro-batch silver merge: ``plans.pipeline.silver_rows``,
+    then the same CORE upsert and REJECT insert as ``build_silver``,
+    applied to whatever dates the batch holds."""
+    core_rows, reject_rows = silver_rows(batch)
+    upsert_partitions(spark, core_rows, wh.silver, keys=SILVER_KEYS)
+    insert_if_absent(spark, reject_rows, wh.reject, keys=SILVER_KEYS)
 
 
 def stream_ingest_eod(

@@ -6,6 +6,10 @@ time-series table is **partitioned by ``trade_date``** so the reference's
 per-date predicate (`WHERE TRADE_DATE = d` on every statement) is partition
 pruning for free, and the per-date MERGE becomes a dynamic partition
 overwrite — the scale-safe substitute for row-level upsert without Delta.
+
+This module is also the package's one table-IO layer: ``table_exists`` and
+``read_table`` are the only existence check and table reader, and
+``fs_path`` is the only place a Hadoop filesystem handle is built.
 """
 
 from __future__ import annotations
@@ -14,6 +18,7 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 @dataclass(frozen=True)
@@ -46,36 +51,34 @@ class Warehouse:
     def fact_daily_price(self) -> str:
         return os.path.join(self.root, "gold", "fact_daily_price")
 
-    @property
-    def ledger(self) -> str:
-        return os.path.join(self.root, "meta", "ingest_ledger")
 
-    def exists(self, spark: SparkSession, path: str) -> bool:
-        """True if `path` exists as a readable table (any files present)."""
-        jvm = spark.sparkContext._jvm
-        jsc = spark.sparkContext._jsc
-        hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hadoop_path.getFileSystem(jsc.hadoopConfiguration())
-        return bool(fs.exists(hadoop_path))
-
-    def read(self, spark: SparkSession, path: str, schema=None) -> DataFrame:
-        reader = spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(path)
+def fs_path(spark: SparkSession, path: str, *children: str):
+    """The Hadoop ``(FileSystem, Path)`` of ``path`` joined with
+    ``children`` — the one place the package builds filesystem handles."""
+    hadoop = spark.sparkContext._jvm.org.apache.hadoop.fs
+    p = hadoop.Path(path)
+    for child in children:
+        p = hadoop.Path(p, child)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
 
 
-def write_partitioned(df: DataFrame, path: str, partition_col: str = "trade_date", mode: str = "overwrite") -> None:
-    """Write a date-partitioned table. With
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` (set in session.py),
-    ``mode="overwrite"`` replaces only the partitions present in ``df`` —
-    the engine's idempotent per-trading-date MERGE substitute
-    (reference unit of work: one date per run)."""
-    df.write.mode(mode).partitionBy(partition_col).parquet(path)
+def table_exists(spark: SparkSession, path: str) -> bool:
+    """True if anything exists at ``path``; a filesystem check, no Spark job."""
+    fs, p = fs_path(spark, path)
+    return bool(fs.exists(p))
 
 
-def append(df: DataFrame, path: str) -> None:
-    df.write.mode("append").parquet(path)
+def read_table(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """Read the parquet table at ``path``. With ``schema`` the footers are
+    not sampled, so no schema-inference job runs; a schema may name a
+    subset of the columns (only those are read, and a column the files
+    lack reads as NULL)."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(path)
 
 
 def write_bucketed(

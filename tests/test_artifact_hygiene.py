@@ -291,3 +291,23 @@ def test_only_the_silver_helper_keys_on_application_id():
                 if "applicationId" in line
             ]
     assert not hits, f"applicationId outside queries/helpers.py: {hits}"
+
+
+def test_only_tables_builds_hadoop_filesystem_handles():
+    """One table-IO layer: ``org.apache.hadoop.fs`` (FileSystem and Path
+    handles for existence checks, staging and renames) is named in
+    ``tables.py`` and nowhere else in the package. Call
+    ``tables.fs_path`` or ``tables.table_exists`` instead."""
+    pkg = os.path.join(ROOT, "securities_pricing_data_pipeline_spark")
+    allowed = os.path.join(pkg, "tables.py")
+    hits = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        if path == allowed:
+            continue
+        with open(path, encoding="utf-8") as fh:
+            hits += [
+                f"{os.path.relpath(path, ROOT)}:{n}"
+                for n, line in enumerate(fh, 1)
+                if "org.apache.hadoop.fs" in line
+            ]
+    assert not hits, f"org.apache.hadoop.fs outside tables.py: {hits}"

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
+from securities_pricing_data_pipeline_spark.functions.normalize import normalize_symbol  # noqa: E402
 from securities_pricing_data_pipeline_spark.operators.dedup import dedup_latest  # noqa: E402
 from securities_pricing_data_pipeline_spark.operators.merge import (  # noqa: E402
     MergeCounts,
@@ -21,9 +22,12 @@ from securities_pricing_data_pipeline_spark.operators.merge import (  # noqa: E4
     upsert_partitions,
 )
 from securities_pricing_data_pipeline_spark.operators.quality import (  # noqa: E402
+    NEGATIVE_VOLUME,
+    NULL_SYMBOL,
     EmptyLoadError,
+    eod_reject_reason,
     existence_gate,
-    split_rejects,
+    split_by_reason,
 )
 from securities_pricing_data_pipeline_spark.operators.surrogate_keys import (  # noqa: E402
     assign_ids,
@@ -128,8 +132,7 @@ def test_insert_if_absent_is_one_action(spark, tmp_path):
         assert jobs == one_write
     code = "".join(
         inspect.getsource(f)
-        for f in (m.insert_if_absent, m.ParquetPartitionOverwriteFormat.insert_if_absent,
-                  m.absent_rows, m.append_staged)
+        for f in (m.insert_if_absent, m.absent_rows, m.append_staged)
     )
     assert not re.search(r"\.cache\(|isEmpty|\.count\(\)", code)
 
@@ -166,16 +169,16 @@ def test_insert_if_absent_empty_leaves_files_alone(spark, tmp_path):
 
 def test_leftover_staging_dir_is_invisible_to_reads(spark, tmp_path):
     """A staged write that died before clean-up leaves a ``_staging-*``
-    directory inside the table; ``Warehouse.read`` must not see its rows."""
+    directory inside the table; ``read_table`` must not see its rows."""
     from securities_pricing_data_pipeline_spark.schemas import DIM_SECURITY_SCHEMA
-    from securities_pricing_data_pipeline_spark.tables import Warehouse
+    from securities_pricing_data_pipeline_spark.tables import Warehouse, read_table
 
     wh = Warehouse(str(tmp_path / "wh"))
     schema = "security_id long, symbol string"
     insert_if_absent(spark, spark.createDataFrame([(1, "A")], schema), wh.dim_security, ["symbol"])
     stray = os.path.join(wh.dim_security, f"_staging-{uuid.uuid4().hex}")
     spark.createDataFrame([(2, "B")], schema).write.parquet(stray)
-    got = {tuple(r) for r in wh.read(spark, wh.dim_security, DIM_SECURITY_SCHEMA).collect()}
+    got = {tuple(r) for r in read_table(spark, wh.dim_security, DIM_SECURITY_SCHEMA).collect()}
     assert got == {(1, "A")}
 
 
@@ -211,40 +214,20 @@ def test_insert_if_absent_is_deterministic_and_keeps_column_order(spark, tmp_pat
     assert {tuple(r) for r in spark.read.parquet(keyed).collect()} == {(None, "x"), ("A", "z")}
 
 
-def test_table_format_seam_parquet_backend(spark, tmp_path):
-    """The parquet format object drives the same LWW upsert and
-    insert-only merge as the module functions."""
-    from securities_pricing_data_pipeline_spark.operators import merge as m
-
-    fmt = m.ParquetPartitionOverwriteFormat()
-    path = str(tmp_path / "seam")
-    d1 = dt.date(2026, 1, 1)
-    base = spark.createDataFrame(
-        [("A", d1, 1.0)], "symbol string, trade_date date, v double"
-    )
-    fmt.upsert_partitions(spark, base, path, keys=["symbol", "trade_date"])
-    src = spark.createDataFrame(
-        [("A", d1, 9.0), ("B", d1, 2.0)], "symbol string, trade_date date, v double"
-    )
-    fmt.upsert_partitions(spark, src, path, keys=["symbol", "trade_date"])
-    got = {(r.symbol, r.trade_date, r.v) for r in fmt.read(spark, path).collect()}
-    assert got == {("A", d1, 9.0), ("B", d1, 2.0)}
-    assert fmt.insert_if_absent(
-        spark,
-        spark.createDataFrame(
-            [("A", d1, 0.0), ("C", d1, 3.0)], "symbol string, trade_date date, v double"
-        ),
-        str(tmp_path / "seam_dim"),
-        keys=["symbol"],
-    ) == 2
-
-
 def test_split_rejects_null_safe(spark):
-    df = spark.createDataFrame([(1, 5), (2, -1), (3, None)], "id int, vol int")
-    valid, rejects = split_rejects(df, F.col("vol") >= 0, "NEG")
+    """The silver reject split: a NULL volume is valid (the reference's
+    ``VOLUME < 0`` is not true for it), a negative volume is a
+    NEGATIVE_VOLUME reject, and a NULL or blank (after normalization)
+    symbol is a NULL_SYMBOL reject."""
+    df = spark.createDataFrame(
+        [(1, "A", 5), (2, "B", -1), (3, "C", None), (4, None, 5), (5, "  ", 5)],
+        "id int, symbol string, volume int",
+    ).withColumn("symbol", normalize_symbol(F.col("symbol")))
+    valid, rejects = split_by_reason(df, eod_reject_reason())
     assert {r.id for r in valid.collect()} == {1, 3}  # NULL volume is valid
-    rej = rejects.collect()
-    assert [r.id for r in rej] == [2] and rej[0].reject_reason == "NEG"
+    assert {(r.id, r.reject_reason) for r in rejects.collect()} == {
+        (2, NEGATIVE_VOLUME), (4, NULL_SYMBOL), (5, NULL_SYMBOL),
+    }
 
 
 def test_existence_gate(spark):
@@ -1098,9 +1081,7 @@ def test_merge_batch_replayed_out_of_order(spark, tmp_path):
     order (an older ts for user A, a newer one for B, a new user C). The
     (ts, event_id) LWW re-reduce must not let the stale A row regress
     the table."""
-    from securities_pricing_data_pipeline_spark.operators.merge import (
-        ParquetPartitionOverwriteFormat,
-    )
+    from securities_pricing_data_pipeline_spark.operators import merge
 
     schema = "user_id string, ts long, event_id long, event_type string, value double"
     b1 = spark.createDataFrame(
@@ -1110,9 +1091,8 @@ def test_merge_batch_replayed_out_of_order(spark, tmp_path):
         [("A", 8, 4, "z", 9.0), ("B", 7, 5, "w", 4.0), ("C", 1, 6, "x", 5.0)], schema
     )
     path = str(tmp_path / "cdc")
-    fmt = ParquetPartitionOverwriteFormat()
     for b in (b1, b2):
-        fmt.merge_batch(spark, b, path, keys=["user_id"], order_cols=["ts", "event_id"])
+        merge.merge_batch(spark, b, path, keys=["user_id"], order_cols=["ts", "event_id"])
     got = {tuple(r) for r in spark.read.parquet(path).collect()}
     assert got == {("A", 12, 2, "y", 2.0), ("B", 7, 5, "w", 4.0), ("C", 1, 6, "x", 5.0)}
 

@@ -22,10 +22,7 @@ from securities_pricing_data_pipeline_spark.operators.quality import (  # noqa: 
     eod_reject_reason,
     split_by_reason,
 )
-from securities_pricing_data_pipeline_spark.plans.metrics import (  # noqa: E402
-    postmerge_counts,
-    premerge_metrics,
-)
+from securities_pricing_data_pipeline_spark.plans.metrics import premerge_metrics  # noqa: E402
 from securities_pricing_data_pipeline_spark.plans.pipeline import run  # noqa: E402
 from securities_pricing_data_pipeline_spark.schemas import (  # noqa: E402
     DIM_DATE_SCHEMA,
@@ -120,15 +117,6 @@ def test_metrics_and_notify(pipeline_run):
     assert m2.est_updates == 0 or m2.est_inserts >= 0  # distinct date → inserts
     assert m1.core_cnt == 51 and m1.fact_cnt == 51
     assert len(messages) == 2 and "SUCCESS" in messages[0]
-
-
-def test_postmerge_counts_recounts_only_missing(pipeline_run):
-    """run() fills core/fact counts from the upserts' observed writes; a
-    count a backend could not observe (None) is re-counted from the
-    table and agrees with the observed one."""
-    spark, wh, _, m1, *_ = pipeline_run
-    assert postmerge_counts(spark, wh.silver, wh.fact_daily_price, D1) == (m1.core_cnt, m1.fact_cnt)
-    assert postmerge_counts(spark, wh.silver, wh.fact_daily_price, D1, written=(7, None)) == (7, 51)
 
 
 def test_idempotent_rerun(pipeline_run):

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, "/root/repo")
 
+from securities_pricing_data_pipeline_spark.plans.pipeline import run  # noqa: E402
 from securities_pricing_data_pipeline_spark.streaming.ingest import (  # noqa: E402
     dedup_event_stream,
     join_events_quotes_stream,
@@ -28,10 +29,14 @@ from tests.fixtures import write_eod_csv  # noqa: E402
 
 
 def test_stream_ingest_matches_batch_semantics(spark, tmp_path):
+    """Streaming ingest of two landing files writes the same silver and
+    reject rows as a batch run() of each file's date (lineage timestamps
+    aside); a late file then upserts only its own date."""
     landing = str(tmp_path / "landing")
     wh = Warehouse(str(tmp_path / "wh"))
-    write_eod_csv(landing, dt.date(2026, 2, 2))
-    write_eod_csv(landing, dt.date(2026, 2, 3))
+    days = (dt.date(2026, 2, 2), dt.date(2026, 2, 3))
+    for day in days:
+        write_eod_csv(landing, day)
 
     q = stream_ingest_eod(spark, landing, wh, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
@@ -41,6 +46,18 @@ def test_stream_ingest_matches_batch_semantics(spark, tmp_path):
     assert silver.select("symbol", "trade_date").distinct().count() == 102
     rejects = spark.read.parquet(wh.reject)
     assert rejects.count() == 4  # 2 negative-volume rows per date
+
+    batch = Warehouse(str(tmp_path / "batch"))
+    for day in days:
+        run(spark, batch, landing, day, notifier=lambda s: None)
+
+    def rows(path):
+        df = spark.read.parquet(path)
+        cols = sorted(set(df.columns) - {"load_ts", "_ingest_ts"})
+        return sorted(map(tuple, df.select(*cols).collect()), key=repr)
+
+    for streamed, batched in ((wh.silver, batch.silver), (wh.reject, batch.reject)):
+        assert rows(streamed) == rows(batched), streamed
 
     # late file arrives → incremental micro-batch upserts only that date
     write_eod_csv(landing, dt.date(2026, 2, 4))
