@@ -362,13 +362,13 @@ def _recent_local_artifacts(n: int) -> list[dict]:
     """The n highest-round committed BENCH_r*_local.json artifacts,
     newest first."""
     here = os.path.dirname(os.path.abspath(__file__))
-    paths = sorted(
-        glob.glob(os.path.join(here, "BENCH_r*_local.json")),
-        key=lambda p: int(re.search(r"_r(\d+)", os.path.basename(p)).group(1)),
-        reverse=True,
-    )
+    rounds = {
+        p: int(m.group(1))
+        for p in glob.glob(os.path.join(here, "BENCH_r*_local.json"))
+        if (m := re.search(r"_r(\d+)", os.path.basename(p)))  # skip names without a round
+    }
     out = []
-    for p in paths[:n]:
+    for p in sorted(rounds, key=rounds.get, reverse=True)[:n]:
         with open(p) as fh:
             out.append(json.load(fh))
     return out

@@ -239,11 +239,6 @@ def _rgb_to_ycbcr_float(px: np.ndarray) -> np.ndarray:
     return np.stack([y, cb, cr], axis=-1)
 
 
-def rgb_to_ycbcr(px: np.ndarray) -> np.ndarray:
-    """JFIF full-range YCbCr, rounded and clamped to uint8."""
-    return np.clip(np.round(_rgb_to_ycbcr_float(px)), 0, 255).astype(np.uint8)
-
-
 def ycbcr_to_rgb(px: np.ndarray) -> np.ndarray:
     """JFIF YCbCr (uint8 or float) → RGB, rounded and clamped to uint8."""
     p = px.astype(np.float64)

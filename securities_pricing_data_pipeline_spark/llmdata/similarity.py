@@ -1719,58 +1719,6 @@ def pq_codes(
     )
 
 
-def kmeans_grid_summary(pts: DataFrame, k: int = 8) -> DataFrame:
-    """Exact-arithmetic Lloyd k-means (two unrolled synchronous rounds)
-    over a pre-gridded point table ``(vec_id, dim, g)`` with int64 grid
-    values — the oracle-checkable twin of :func:`kmeans_centroids` (which
-    trains float centroids for IVF). Seeds are the k lowest vec_ids;
-    assignment argmin breaks ties to the smaller centroid id; the
-    centroid update is the offset floored quotient (sg + n·2e7) DIV n −
-    2e7 (the shift keeps the numerator non-negative, so truncating and
-    flooring integer division agree across engines); inertia sums in
-    decimal(38,0) (per-pair distances reach ~1e15 — an int64 corpus sum
-    overflows near 1e4 vectors). Returns one row per surviving cluster:
-    (cid, n_vectors, n_moved_in, inertia).
-
-    Scale: centroids are ≤ k·dim rows (broadcast); each round is one
-    broadcast join + two hash aggregates shuffling (vec_id, cid, dist)
-    triples only."""
-    OFF = "CAST(20000000 AS BIGINT)"
-    c0 = pts.filter(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cid"), "dim", F.col("g").alias("c")
-    )
-
-    def assign(cent: DataFrame) -> DataFrame:
-        d = pts.join(F.broadcast(cent), "dim")
-        diff = F.col("g") - F.col("c")
-        dist = d.groupBy("vec_id", "cid").agg(F.sum(diff * diff).alias("dist"))
-        w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-        return (
-            dist.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-
-    a1 = assign(c0)
-    c1 = (
-        pts.join(a1.select("vec_id", "cid"), "vec_id")
-        .groupBy("cid", "dim")
-        .agg(F.count("*").alias("n"), F.sum("g").alias("sg"))
-        .select("cid", "dim", F.expr(f"(sg + n * {OFF}) DIV n - {OFF}").alias("c"))
-    )
-    a2 = assign(c1)
-    j = a2.join(a1.select("vec_id", F.col("cid").alias("cid1")), "vec_id")
-    return j.groupBy("cid").agg(
-        F.count("*").alias("n_vectors"),
-        F.sum(F.when(F.col("cid1") != F.col("cid"), 1).otherwise(0)).alias(
-            "n_moved_in"
-        ),
-        (
-            F.sum(F.col("dist").cast("decimal(38,0)")).cast("double") / F.lit(1e14)
-        ).alias("inertia"),
-    )
-
-
 def mmr_select(
     slim: DataFrame,
     pairs: DataFrame,

@@ -8,12 +8,15 @@ only fan-out (dims build independently after CORE) is just two independent
 writes.
 
 Stage map (reference task → here):
-  t01 download            → sources.eod_api (driver fetch / backfill_source)
+  t01 download            → sources.eod_api (driver fetch) or the eod_bars
+                            Python Data Source (sources.eod_datasource,
+                            one task per date)
   t02 verify local file   → sources.csv_source.file_exists_gate
-  t03 upload S3           → ingest_bronze's partitioned append to the
+  t03 upload S3           → append_bronze, the partitioned append to the
                             bronze root (the path IS the date layout:
                             trade_date=YYYY-MM-DD/)
-  s01 COPY INTO RAW       → sources.csv_source.read_eod_csv → bronze append
+  s01 COPY INTO RAW       → sources.csv_source.read_eod_csv → append_bronze
+                            (both shared with streaming.ingest)
   s02 check loaded        → the row count observed on the bronze append;
                             operators.quality.existence_gate (a real
                             assert, one isEmpty probe) only when the
@@ -113,20 +116,28 @@ def _day(spark: SparkSession, path: str, schema, trading_date: dt.date) -> DataF
     return read_table(spark, path, schema).filter(F.col("trade_date") == F.lit(trading_date))
 
 
+def append_bronze(wh: Warehouse, rows: DataFrame) -> int:
+    """The bronze append, shared by ``ingest_bronze`` and the streaming
+    ingest: ``rows`` appended under the trade_date-partitioned bronze root
+    (append-only, FORCE=TRUE parity). Returns the row count observed on
+    the write itself."""
+    appended = Observation()
+    rows.observe(appended, F.count(F.lit(1)).alias("n")).write.mode("append").partitionBy(
+        "trade_date"
+    ).parquet(wh.bronze)
+    return appended.get["n"]
+
+
 def ingest_bronze(
     spark: SparkSession, wh: Warehouse, landing_path: str, trading_date: dt.date
 ) -> DataFrame:
     """s01: landing CSVs → bronze append (typed, lineage-stamped).
-    Bronze is partitioned by trade_date and append-only. s02 reads the
-    row count observed on the append; only an append of 0 rows leaves the
-    gate to probe the day's bronze partition."""
+    s02 reads the row count observed on the append; only an append of 0
+    rows leaves the gate to probe the day's bronze partition."""
     raw = read_eod_csv(spark, landing_path).filter(F.col("trade_date") == F.lit(trading_date))
-    appended = Observation()
-    raw.observe(appended, F.count(F.lit(1)).alias("n")).write.mode("append").partitionBy(
-        "trade_date"
-    ).parquet(wh.bronze)
+    appended = append_bronze(wh, raw)
     loaded = _day(spark, wh.bronze, RAW_EOD_PRICES_SCHEMA, trading_date)
-    if not appended.get["n"]:
+    if not appended:
         existence_gate(loaded, f"bronze load for {trading_date}")  # s02
     return loaded
 

@@ -161,10 +161,6 @@ def davg(c: Column, scale: int) -> Column:
 
 
 # SQL-side equivalents for oracle strings
-def sql_dec(expr: str, scale: int) -> str:
-    return f"CAST({expr} AS DECIMAL(38,{scale}))"
-
-
 def sql_dsum(expr: str, scale: int) -> str:
     return f"CAST(SUM(CAST({expr} AS DECIMAL(38,{scale}))) AS DOUBLE)"
 

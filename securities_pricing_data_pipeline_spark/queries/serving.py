@@ -685,13 +685,6 @@ def _ewma_lag_terms(
     return num, den
 
 
-def _int_ewma(cu: Column, w: Window, weights: list[int], dens: list[int]) -> Column:
-    """num/den of ``_ewma_lag_terms`` as the single double division the
-    oracle mirrors (matching the reversed-list formulation in the SQL)."""
-    num, den = _ewma_lag_terms(cu, w, weights, dens)
-    return num.cast("double") / den.cast("double")
-
-
 def q24_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MACD (12, 26, 9) over 30-row windows: macd = EWMA₁₂ − EWMA₂₆ of
     close; signal = EWMA₉ of the macd series; histogram = macd − signal.

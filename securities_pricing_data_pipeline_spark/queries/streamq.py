@@ -408,8 +408,9 @@ def stream_events_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     MERGE INTO touching only matched files. State lives in the table,
     not executor memory — the pattern Spark itself recommends for
     arbitrary-size upsert state. The 8-file split stands in for a real
-    feed's file-per-interval landing (sources.eod_api writes the same
-    layout)."""
+    feed's file-per-interval landing (the EOD landing directory that
+    ``streaming.ingest.stream_ingest_eod`` watches has the same shape:
+    one file per trading date)."""
     import shutil
     import uuid
     from pathlib import Path

@@ -15,6 +15,12 @@ Reproduces ``dags/sql/1. copy_to_raw.sql:15-39``:
   * lineage columns ``_src_file`` (METADATA$FILENAME) and ``_ingest_ts``
     (CURRENT_TIMESTAMP) stamped at read time.
 
+This is the only module that reads CSV: the batch pipeline
+(``plans.pipeline.ingest_bronze``) and the streaming ingest
+(``streaming.ingest.stream_ingest_eod``) both read landing files through
+``read_eod_csv``, so a row the batch load skips never reaches a streamed
+table either.
+
 Scale note: the corrupt-record pass adds one string column inside the
 scan only — no extra job, no shuffle; the filter is evaluated row-local
 in the same stage, so the 100 TB cost is identical to the plain read.
@@ -24,9 +30,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamReader
 
 from securities_pricing_data_pipeline_spark.schemas import EOD_CSV_SCHEMA
 
@@ -46,7 +53,9 @@ def file_exists_gate(path: str) -> None:
         raise FileNotFoundError(f"landing file/dir missing: {path}")
 
 
-def _read_with_corrupt(spark: SparkSession, path: str) -> DataFrame:
+def _read_with_corrupt(
+    spark: SparkSession, path: str, reader: DataFrameReader | DataStreamReader | None = None
+) -> DataFrame:
     # With parser column pruning on, only projected fields are converted, so
     # a cast failure in an unprojected column would neither mark the row
     # corrupt nor drop it — semantics would then depend on the consumer's
@@ -54,7 +63,8 @@ def _read_with_corrupt(spark: SparkSession, path: str) -> DataFrame:
     # off (runtime-settable; CSV is only read through this module).
     spark.conf.set("spark.sql.csv.parser.columnPruning.enabled", "false")
     return (
-        spark.read.schema(_READ_SCHEMA)
+        (reader or spark.read)
+        .schema(_READ_SCHEMA)
         .option("header", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", _CORRUPT)
@@ -65,15 +75,21 @@ def _read_with_corrupt(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_eod_csv(spark: SparkSession, path: str) -> DataFrame:
+def read_eod_csv(
+    spark: SparkSession, path: str, reader: DataFrameReader | DataStreamReader | None = None
+) -> DataFrame:
     """Read landing CSVs into the bronze shape (typed + lineage), skipping
-    whole rows on any conversion failure (ON_ERROR='CONTINUE')."""
+    whole rows on any conversion failure (ON_ERROR='CONTINUE').
+
+    ``reader`` picks batch or stream: ``spark.read`` by default, or a
+    ``spark.readStream`` (carrying its own trigger options) for a
+    file-source stream with the same schema, dialect and row skip."""
     # The always-true symbol clause anchors one data column in the scan's
     # required schema: a fully-pruned consumer (e.g. ``df.count()``) would
     # otherwise reference only the corrupt column, which the analyzer
     # rejects (QUERY_ONLY_CORRUPT_RECORD_COLUMN).
     keep = F.col(_CORRUPT).isNull() & (F.length(F.coalesce(F.col("symbol"), F.lit(""))) >= 0)
-    df = _read_with_corrupt(spark, path).filter(keep).drop(_CORRUPT)
+    df = _read_with_corrupt(spark, path, reader).filter(keep).drop(_CORRUPT)
     return df.withColumn("_src_file", F.input_file_name()).withColumn(
         "_ingest_ts", F.current_timestamp()
     )

@@ -9,10 +9,11 @@ Reference behavior (``dags/lib/eod_data_downloader.py:24-61``):
     volume`` with a constant ``trade_date``, missing keys → NULL.
 
 Spark-first shape: the fetch is a driver-side call that yields a small
-per-day row list (≈10⁴ rows/day) → ``spark.createDataFrame``. At real
-scale (per-minute bars, thousands of days backfill) the same ``fetch_day``
-is distributed with ``mapInPandas`` over a frame of dates — each partition
-fetches its own dates, no driver bottleneck (see ``backfill_source``).
+per-day row list (≈10⁴ rows/day) → ``spark.createDataFrame``. A multi-day
+backfill reads through the ``eod_bars`` Python Data Source
+(``sources.eod_datasource``) instead: one task per date, each fetching and
+projecting its own date on an executor with this module's ``http_fetcher``
+and ``project_rows``.
 
 No secrets/endpoints are baked in: callers pass base_url + api_key. Tests
 inject a deterministic ``fetcher`` (no network in this environment).
@@ -22,6 +23,7 @@ from __future__ import annotations
 
 import datetime as dt
 from collections.abc import Callable, Iterator
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -66,59 +68,23 @@ def fetch_day_with_lookback(
     raise RuntimeError(f"no data within {lookback_days} days before {requested}")
 
 
-def rows_to_frame(spark: SparkSession, day: dt.date, rows: list[dict]) -> DataFrame:
-    """S2 projection/rename: T,o,h,l,c,v → typed bar columns; missing → NULL."""
-    from decimal import Decimal
-
-    def price(v):
-        return Decimal(str(v)) if v is not None else None
-
-    projected = [
-        (
+def project_rows(day: dt.date, rows: list[dict]) -> Iterator[tuple]:
+    """S2 projection: T,o,h,l,c,v → one ``EOD_CSV_SCHEMA`` tuple per row;
+    missing keys → NULL. Prices go through ``str`` so float inputs keep
+    their printed digits. The one projection of the driver fetch and of
+    every ``eod_bars`` reader."""
+    for r in rows:
+        yield (
             day,
             r.get("T"),
-            price(r.get("o")),
-            price(r.get("h")),
-            price(r.get("l")),
-            price(r.get("c")),
-            Decimal(int(r["v"])) if r.get("v") is not None else None,
+            None if r.get("o") is None else Decimal(str(r["o"])),
+            None if r.get("h") is None else Decimal(str(r["h"])),
+            None if r.get("l") is None else Decimal(str(r["l"])),
+            None if r.get("c") is None else Decimal(str(r["c"])),
+            None if r.get("v") is None else Decimal(int(r["v"])),
         )
-        for r in rows
-    ]
-    return spark.createDataFrame(projected, EOD_CSV_SCHEMA)
 
 
-def backfill_source(
-    spark: SparkSession, fetcher: Fetcher, days: list[dt.date], partitions: int | None = None
-) -> DataFrame:
-    """Distributed multi-day fetch: one task per chunk of dates, executed on
-    executors via mapInPandas — the 100 TB-posture ingestion path."""
-    import pandas as pd
-
-    dates_df = spark.createDataFrame([(d,) for d in days], "trade_date date").repartition(
-        partitions or min(len(days), 64)
-    )
-
-    def fetch_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for d in pdf["trade_date"]:
-                day = d if isinstance(d, dt.date) else d.date()
-                for r in fetcher(day):
-                    out.append(
-                        {
-                            "trade_date": day,
-                            "symbol": r.get("T"),
-                            "open": r.get("o"),
-                            "high": r.get("h"),
-                            "low": r.get("l"),
-                            "close": r.get("c"),
-                            "volume": r.get("v"),
-                        }
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["trade_date", "symbol", "open", "high", "low", "close", "volume"],
-            )
-
-    return dates_df.mapInPandas(fetch_batch, EOD_CSV_SCHEMA)
+def rows_to_frame(spark: SparkSession, day: dt.date, rows: list[dict]) -> DataFrame:
+    """One fetched day as a typed bar frame (``project_rows``)."""
+    return spark.createDataFrame(list(project_rows(day, rows)), EOD_CSV_SCHEMA)

@@ -1,13 +1,15 @@
 """S1 as a first-class Spark 4 Python Data Source: ``spark.read
 .format("eod_bars")`` / ``spark.readStream.format("eod_bars")``.
 
-Where ``eod_api.backfill_source`` distributes the fetch by hand over
-``mapInPandas``, this wraps the same per-day fetch in the
-``pyspark.sql.datasource`` API so Catalyst owns planning: one
-``InputPartition`` per trading date (fetches run on executors, scale with
-the cluster, retry per-task on failure), schema declared up front, and
-the identical source usable from both batch and Structured Streaming
-(daily-poll micro-batches via ``SimpleDataSourceStreamReader``).
+This is the one distributed EOD fetch. It wraps the per-day fetch of
+``sources.eod_api`` in the ``pyspark.sql.datasource`` API so Catalyst owns
+planning: one ``InputPartition`` per trading date (fetches run on
+executors, scale with the cluster, retry per-task on failure), schema
+declared up front, and the identical source usable from both batch and
+Structured Streaming (daily-poll micro-batches via
+``SimpleDataSourceStreamReader``). Batch and stream readers fetch a date
+range through one generator, ``_fetch_days``, and project every row with
+``eod_api.project_rows``.
 
 Reference parity: the fetch window + projection mirror
 ``dags/lib/eod_data_downloader.py:24-61``; no endpoints or secrets are
@@ -29,12 +31,12 @@ from decimal import Decimal
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,  # noqa: F401  (re-export for discoverability)
     InputPartition,
     SimpleDataSourceStreamReader,
 )
 
 from securities_pricing_data_pipeline_spark.schemas import EOD_CSV_SCHEMA
+from securities_pricing_data_pipeline_spark.sources.eod_api import http_fetcher, project_rows
 
 
 def synthetic_day(day: dt.date, n_symbols: int) -> list[dict]:
@@ -59,32 +61,21 @@ def synthetic_day(day: dt.date, n_symbols: int) -> list[dict]:
     return rows
 
 
-def _project(day: dt.date, rows: list[dict]):
-    """S2 projection: T,o,h,l,c,v → typed bar tuple; missing keys → NULL."""
-    for r in rows:
-        yield (
-            day,
-            r.get("T"),
-            None if r.get("o") is None else Decimal(str(r["o"])),
-            None if r.get("h") is None else Decimal(str(r["h"])),
-            None if r.get("l") is None else Decimal(str(r["l"])),
-            None if r.get("c") is None else Decimal(str(r["c"])),
-            None if r.get("v") is None else Decimal(int(r["v"])),
-        )
-
-
 def _fetcher_from_options(options: dict):
     mode = options.get("mode", "synthetic")
     if mode == "synthetic":
         n = int(options.get("n_symbols", "50"))
         return lambda day: synthetic_day(day, n)
     if mode == "http":
-        from securities_pricing_data_pipeline_spark.sources.eod_api import http_fetcher
-
         return http_fetcher(
             options["base_url"], options["api_key"], int(options.get("timeout_s", "60"))
         )
     raise ValueError(f"unknown eod_bars mode: {mode!r}")
+
+
+def _days(first: dt.date, last: dt.date) -> list[dt.date]:
+    """Every calendar date in ``[first, last]`` (empty when last < first)."""
+    return [first + dt.timedelta(days=k) for k in range((last - first).days + 1)]
 
 
 def _date_range(options: dict) -> list[dt.date]:
@@ -92,7 +83,14 @@ def _date_range(options: dict) -> list[dt.date]:
     end = dt.date.fromisoformat(options["end_date"])
     if end < start:
         raise ValueError(f"end_date {end} < start_date {start}")
-    return [start + dt.timedelta(days=k) for k in range((end - start).days + 1)]
+    return _days(start, end)
+
+
+def _fetch_days(options: dict, first: dt.date, last: dt.date):
+    """Projected rows of every date in ``[first, last]``, in date order."""
+    fetcher = _fetcher_from_options(options)
+    for day in _days(first, last):
+        yield from project_rows(day, fetcher(day))
 
 
 class _DayPartition(InputPartition):
@@ -110,8 +108,7 @@ class EodBarsBatchReader(DataSourceReader):
     def read(self, partition: _DayPartition):
         # runs on the executor: fetch + project exactly one date
         day = dt.date.fromisoformat(partition.day)
-        fetcher = _fetcher_from_options(self.options)
-        yield from _project(day, fetcher(day))
+        yield from _fetch_days(self.options, day, day)
 
 
 class EodBarsStreamReader(SimpleDataSourceStreamReader):
@@ -131,23 +128,14 @@ class EodBarsStreamReader(SimpleDataSourceStreamReader):
         if first > end:
             return iter([]), start
         last = min(first + dt.timedelta(days=self.days_per_batch - 1), end)
-        fetcher = _fetcher_from_options(self.options)
-        rows = []
-        day = first
-        while day <= last:
-            rows.extend(_project(day, fetcher(day)))
-            day += dt.timedelta(days=1)
+        rows = list(_fetch_days(self.options, first, last))  # prefetched batch
         return iter(rows), {"next": (last + dt.timedelta(days=1)).isoformat()}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         # replay for recovery: deterministic fetch makes this exact
         first = dt.date.fromisoformat(start["next"])
         last = dt.date.fromisoformat(end["next"]) - dt.timedelta(days=1)
-        fetcher = _fetcher_from_options(self.options)
-        day = first
-        while day <= last:
-            yield from _project(day, fetcher(day))
-            day += dt.timedelta(days=1)
+        return _fetch_days(self.options, first, last)
 
 
 class EodBarsDataSource(DataSource):

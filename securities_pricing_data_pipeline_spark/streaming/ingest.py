@@ -1,12 +1,14 @@
 """Structured Streaming ingestion variant (SURVEY §7 item 8).
 
 The batch pipeline's unit of work is a trading date; the streaming variant
-watches the landing directory and applies the same silver merge per
-micro-batch via ``foreachBatch``. The foreachBatch frame is just a
-DataFrame, so both build their silver and reject rows with one function,
-``plans.pipeline.silver_rows``, and write them with the same merges; only
-the partition values differ (the batch run knows its one trading date, a
-micro-batch collects the dates it holds).
+watches the landing directory and loads each micro-batch via
+``foreachBatch``. The foreachBatch frame is just a DataFrame, so every step
+is the batch pipeline's own: the landing files are read by
+``sources.csv_source.read_eod_csv`` (same schema, dialect and
+ON_ERROR='CONTINUE' row skip), appended by ``plans.pipeline.append_bronze``,
+turned into silver and reject rows by ``plans.pipeline.silver_rows`` and
+written with the same merges. Only the partition values differ (the batch
+run knows its one trading date, a micro-batch collects the dates it holds).
 
 Scale posture: file-source streams scale by listing cost — at production
 volume use a notification-based source; ``maxFilesPerTrigger`` bounds
@@ -23,18 +25,13 @@ from securities_pricing_data_pipeline_spark.operators.merge import (
     insert_if_absent,
     upsert_partitions,
 )
-from securities_pricing_data_pipeline_spark.plans.pipeline import SILVER_KEYS, silver_rows
-from securities_pricing_data_pipeline_spark.schemas import EOD_CSV_SCHEMA
+from securities_pricing_data_pipeline_spark.plans.pipeline import (
+    SILVER_KEYS,
+    append_bronze,
+    silver_rows,
+)
+from securities_pricing_data_pipeline_spark.sources.csv_source import read_eod_csv
 from securities_pricing_data_pipeline_spark.tables import Warehouse
-
-
-def _merge_batch(spark: SparkSession, wh: Warehouse, batch: DataFrame) -> None:
-    """The per-micro-batch silver merge: ``plans.pipeline.silver_rows``,
-    then the same CORE upsert and REJECT insert as ``build_silver``,
-    applied to whatever dates the batch holds."""
-    core_rows, reject_rows = silver_rows(batch)
-    upsert_partitions(spark, core_rows, wh.silver, keys=SILVER_KEYS)
-    insert_if_absent(spark, reject_rows, wh.reject, keys=SILVER_KEYS)
 
 
 def stream_ingest_eod(
@@ -45,32 +42,25 @@ def stream_ingest_eod(
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
-    """File-source stream over the landing dir → silver merge per batch.
+    """File-source stream over the landing dir → bronze append, then the
+    silver merge, per micro-batch.
 
     ``available_now=True`` drains the backlog and stops (test/backfill
     mode); otherwise runs continuously.
     """
-    reader = (
-        spark.readStream.schema(EOD_CSV_SCHEMA)
-        .option("header", True)
-        .option("pathGlobFilter", "*.csv*")
-        .option("nullValue", "NULL")
-        .option("emptyValue", None)
-    )
+    reader = spark.readStream
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.csv(landing_dir)
-        .withColumn("_src_file", F.input_file_name())
-        .withColumn("_ingest_ts", F.current_timestamp())
-    )
+    stream = read_eod_csv(spark, landing_dir, reader)
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.limit(1).count() == 0:
+        # bronze append first (FORCE=TRUE parity); its observed row count
+        # skips the silver merge of an empty micro-batch
+        if not append_bronze(wh, batch):
             return
-        # bronze append first (FORCE=TRUE parity), then silver merge
-        batch.write.mode("append").partitionBy("trade_date").parquet(wh.bronze)
-        _merge_batch(spark, wh, batch)
+        core_rows, reject_rows = silver_rows(batch)
+        upsert_partitions(spark, core_rows, wh.silver, keys=SILVER_KEYS)
+        insert_if_absent(spark, reject_rows, wh.reject, keys=SILVER_KEYS)
 
     writer = stream.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
     if available_now:

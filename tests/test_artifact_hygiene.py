@@ -207,6 +207,19 @@ def test_canary_baseline_is_best_of_last_three(monkeypatch):
     assert bench._canary_baseline(0.5) is None
 
 
+def test_recent_local_artifacts_skips_names_without_round(monkeypatch, tmp_path):
+    """A ``BENCH_r*_local.json`` name without round digits (the glob
+    matches e.g. ``BENCH_rc_local.json``) is skipped, not a crash, and the
+    rest still come back highest round first."""
+    import bench
+
+    for name, sf in (("BENCH_r2_local.json", 0.2), ("BENCH_r10_local.json", 1.0),
+                     ("BENCH_rc_local.json", 9.0)):
+        (tmp_path / name).write_text(json.dumps({"sf": sf}))
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    assert [a["sf"] for a in bench._recent_local_artifacts(3)] == [1.0, 0.2]
+
+
 def test_oracle_and_queries_expose_identical_name_sets():
     import __spark_entry__ as entry
 
@@ -311,3 +324,24 @@ def test_only_tables_builds_hadoop_filesystem_handles():
                 if "org.apache.hadoop.fs" in line
             ]
     assert not hits, f"org.apache.hadoop.fs outside tables.py: {hits}"
+
+
+def test_only_csv_source_reads_csv():
+    """One landing-CSV reader: no package module other than
+    ``sources/csv_source.py`` calls ``.csv(`` or sets
+    ``columnNameOfCorruptRecord``, so batch and streaming ingest share one
+    schema, dialect and ON_ERROR='CONTINUE' row skip. Read landing files
+    with ``sources.csv_source.read_eod_csv``."""
+    pkg = os.path.join(ROOT, "securities_pricing_data_pipeline_spark")
+    allowed = os.path.join(pkg, "sources", "csv_source.py")
+    hits = []
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        if path == allowed:
+            continue
+        with open(path, encoding="utf-8") as fh:
+            hits += [
+                f"{os.path.relpath(path, ROOT)}:{n}"
+                for n, line in enumerate(fh, 1)
+                if ".csv(" in line or "columnNameOfCorruptRecord" in line
+            ]
+    assert not hits, f"CSV read outside sources/csv_source.py: {hits}"

@@ -8,6 +8,7 @@ import os
 import re
 import sys
 import uuid
+from decimal import Decimal
 
 from pyspark.sql import functions as F
 
@@ -34,7 +35,6 @@ from securities_pricing_data_pipeline_spark.operators.surrogate_keys import (  #
     next_id,
 )
 from securities_pricing_data_pipeline_spark.sources.eod_api import (  # noqa: E402
-    backfill_source,
     fetch_day_with_lookback,
     rows_to_frame,
 )
@@ -315,25 +315,9 @@ def test_lookback_and_projection(spark):
     assert day == dt.date(2026, 1, 2)
     df = rows_to_frame(spark, day, rows)
     got = {(r.symbol, r.open, r.volume is not None) for r in df.collect()}
-    assert ("BBB", None, True) in got
+    assert ("BBB", None, True) in got  # missing key → NULL
+    assert ("AAA", Decimal("1.0"), True) in got  # float input
     assert df.schema["trade_date"].dataType.typeName() == "date"
-
-
-def test_backfill_source_distributed(spark):
-    # defined locally so cloudpickle ships it by value to python workers
-    def fetcher(day: dt.date):
-        if day.weekday() >= 5:
-            return []
-        return [
-            {"T": "AAA", "o": 1.0, "h": 2.0, "l": 0.5, "c": 1.5, "v": 100},
-            {"T": "BBB", "c": 9.9, "v": 7},
-        ]
-
-    days = [dt.date(2026, 1, 5), dt.date(2026, 1, 6), dt.date(2026, 1, 10)]  # Sat empty
-    df = backfill_source(spark, fetcher, days, partitions=2)
-    rows = df.collect()
-    assert len(rows) == 4  # 2 weekdays × 2 symbols
-    assert {str(r.trade_date) for r in rows} == {"2026-01-05", "2026-01-06"}
 
 
 def test_asof_forward_picks_next_at_or_after(spark):

@@ -25,27 +25,30 @@ from securities_pricing_data_pipeline_spark.streaming.stateful import (  # noqa:
     sessionize_stream,
 )
 from securities_pricing_data_pipeline_spark.tables import Warehouse  # noqa: E402
-from tests.fixtures import write_eod_csv  # noqa: E402
+from tests.fixtures import write_corrupt_eod_csv, write_eod_csv  # noqa: E402
 
 
 def test_stream_ingest_matches_batch_semantics(spark, tmp_path):
-    """Streaming ingest of two landing files writes the same silver and
-    reject rows as a batch run() of each file's date (lineage timestamps
-    aside); a late file then upserts only its own date."""
+    """Streaming ingest of three landing files, one of them with corrupt
+    rows, writes the same bronze, silver and reject rows as a batch run()
+    of each file's date (lineage timestamps aside): the stream skips
+    whole corrupt rows exactly like the batch load. A late file then
+    upserts only its own date."""
     landing = str(tmp_path / "landing")
     wh = Warehouse(str(tmp_path / "wh"))
-    days = (dt.date(2026, 2, 2), dt.date(2026, 2, 3))
-    for day in days:
+    days = (dt.date(2026, 2, 2), dt.date(2026, 2, 3), dt.date(2026, 2, 4))
+    for day in days[:2]:
         write_eod_csv(landing, day)
+    write_corrupt_eod_csv(landing, days[2])  # GOOD1, GOOD2, NULLY + 3 bad rows
 
     q = stream_ingest_eod(spark, landing, wh, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     silver = spark.read.parquet(wh.silver)
-    assert silver.count() == 102  # 51 valid keys per date
-    assert silver.select("symbol", "trade_date").distinct().count() == 102
+    assert silver.count() == 105  # 51 valid keys per clean date + 3
+    assert silver.select("symbol", "trade_date").distinct().count() == 105
     rejects = spark.read.parquet(wh.reject)
-    assert rejects.count() == 4  # 2 negative-volume rows per date
+    assert rejects.count() == 4  # 2 negative-volume rows per clean date
 
     batch = Warehouse(str(tmp_path / "batch"))
     for day in days:
@@ -56,14 +59,18 @@ def test_stream_ingest_matches_batch_semantics(spark, tmp_path):
         cols = sorted(set(df.columns) - {"load_ts", "_ingest_ts"})
         return sorted(map(tuple, df.select(*cols).collect()), key=repr)
 
-    for streamed, batched in ((wh.silver, batch.silver), (wh.reject, batch.reject)):
+    for streamed, batched in (
+        (wh.bronze, batch.bronze),
+        (wh.silver, batch.silver),
+        (wh.reject, batch.reject),
+    ):
         assert rows(streamed) == rows(batched), streamed
 
     # late file arrives → incremental micro-batch upserts only that date
-    write_eod_csv(landing, dt.date(2026, 2, 4))
+    write_eod_csv(landing, dt.date(2026, 2, 5))
     q2 = stream_ingest_eod(spark, landing, wh, str(tmp_path / "ckpt"))
     q2.awaitTermination(120)
-    assert spark.read.parquet(wh.silver).count() == 153
+    assert spark.read.parquet(wh.silver).count() == 156
 
 
 def test_windowed_stream_matches_batch(spark, tmp_path):
